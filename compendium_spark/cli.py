@@ -27,6 +27,12 @@ Commands:
 
 Side effects the reference shells out for (git clone, sbatch, tar)
 are out of engine scope and stay behind the orchestration boundary.
+
+Each command does its Spark work once. The row counts `xml`, `tags`
+and `load-results` print are `Observation` metrics gathered by the
+write job itself, never a second action that would re-parse the XML
+or re-melt the count matrix; `asvs` runs the region kernel once and
+prints from the same collected rows it stores.
 """
 
 from __future__ import annotations
@@ -35,11 +41,12 @@ import argparse
 import sys
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from compendium_spark.functions.qc import project_disposition, project_qc, sample_qc
 from compendium_spark.functions.sources_filter import filter_sources
+from compendium_spark.localframe import local_df
 from compendium_spark.pipeline import amplicon, orchestrate
 from compendium_spark.pipeline.enrichment import (
     UPDATE_FIELDS,
@@ -72,6 +79,14 @@ def _spark() -> SparkSession:
     from compendium_spark.session import get_session  # noqa: PLC0415
 
     return get_session("compendium_spark_cli")
+
+
+def _append_counted(wh: Warehouse, name: str, df: DataFrame) -> int:
+    """Append ``df`` to table ``name`` and return the rows written,
+    counted by an ``Observation`` on the write job itself."""
+    obs = Observation()
+    wh.append(name, df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return obs.get["rows"]
 
 
 def cmd_init(wh: Warehouse, args) -> int:
@@ -151,8 +166,7 @@ def cmd_xml(wh: Warehouse, args) -> int:
         F.lit(None).cast("long").alias("total_bases"),
         F.lit(None).cast("string").alias("geo_loc_name"),
     )
-    n = full.count()
-    wh.append("samples", full)
+    n = _append_counted(wh, "samples", full)
     print(f"saved {n} new samples")  # db.py:262 tally
     return 0
 
@@ -160,10 +174,30 @@ def cmd_xml(wh: Warehouse, args) -> int:
 def cmd_tags(wh: Warehouse, args) -> int:
     parsed = read_biosample_xml(wh.spark, args.file)
     new = to_tags(parsed, existing=wh.read("tags"))
-    n = new.count()
-    wh.append("tags", new)
+    n = _append_counted(wh, "tags", new)
     print(f"saved tags for new samples: {n} rows")
     return 0
+
+
+# staged enrichment row, positional: srs, then the fetched fields
+_STAGED_COLS = ("srs", *UPDATE_FIELDS)
+_STAGED_SCHEMA = (
+    "srs string, srr array<string>, project string, library_strategy string, "
+    "library_source string, pubdate string, total_bases long, instrument string"
+)
+
+
+def _collapse_staged(staged_rows: list[dict]) -> list[tuple]:
+    """One staged row per srs, in fetch order; a later non-null field
+    overrides an earlier one, as sequential UPDATEs would. A repeated
+    srs would otherwise multiply its sample row in the keyed merge
+    (partial_update left-joins the target to the updates)."""
+    by_srs: dict[str, dict] = {}
+    for d in staged_rows:
+        by_srs.setdefault(d["srs"], {}).update(
+            (k, v) for k, v in d.items() if v is not None
+        )
+    return [tuple(d.get(c) for c in _STAGED_COLS) for d in by_srs.values()]
 
 
 def cmd_runs(wh: Warehouse, args) -> int:
@@ -186,15 +220,13 @@ def cmd_runs(wh: Warehouse, args) -> int:
             time.sleep(0.5)  # db.py:321 rate limit
             return requests.get(url, timeout=25).text  # config_template.py:30
 
-    staged_rows = fetch_batches(batches, fetch)
+    staged_rows = _collapse_staged(fetch_batches(batches, fetch))
     if not staged_rows:
         print("no updates fetched")
         return 0
-    staged = wh.spark.createDataFrame(
-        staged_rows,
-        "srs string, srr array<string>, project string, library_strategy string, "
-        "library_source string, pubdate string, total_bases long, instrument string",
-    ).withColumn("pubdate", F.col("pubdate").cast("timestamp"))
+    staged = local_df(wh.spark, staged_rows, _STAGED_SCHEMA).withColumn(
+        "pubdate", F.col("pubdate").cast("timestamp")
+    )
     # partition-pruned MERGE: rewrites O(touched taxa), never the full
     # samples table (apply_enrichment stays as the frame-level form the
     # emulation tests pin; this is its warehouse-pruned equivalent)
@@ -213,9 +245,17 @@ def cmd_asvs(wh: Warehouse, args) -> int:
     if not todo_projects:
         print("no projects to evaluate")
         return 0
-    results = amplicon.infer_regions(seqs.filter(F.col("project").isin(todo_projects)))
-    wh.upsert("asv_inference", results, key="project")
-    for r in results.collect():
+    # ≤count rows, one per project: the alignment kernel runs once, and
+    # the upsert's own jobs re-read the collected rows, not the kernel
+    results = amplicon.infer_regions(
+        seqs.filter(F.col("project").isin(todo_projects))
+    ).collect()
+    wh.upsert(
+        "asv_inference",
+        local_df(wh.spark, [tuple(r) for r in results], wh.tables["asv_inference"]),
+        key="project",
+    )
+    for r in results:
         print(f"{r.project}: {r.region}, {r.length}")
     return 0
 
@@ -236,9 +276,9 @@ def cmd_load_results(wh: Warehouse, args) -> int:
     fasta = read_fasta(wh.spark, f"{d}/ASVs.fa")
     taxonomy = read_taxonomy(wh.spark, f"{d}/ASVs_taxonomy.tsv")
     seqs, assigns = assemble_asv_tables(fasta, taxonomy, project=args.project)
-    wh.append("asv_counts", counts)
-    wh.append("asv_sequences", seqs)
-    wh.append("asv_assignments", assigns)
+    n_counts = _append_counted(wh, "asv_counts", counts)
+    n_seqs = _append_counted(wh, "asv_sequences", seqs)
+    n_assigns = _append_counted(wh, "asv_assignments", assigns)
     # full lifecycle tail (projects.py:525-551): results recorded →
     # complete; archive written → archived; files deleted → done.
     # Without --archive-dir the project stays at 'complete' (the
@@ -253,8 +293,8 @@ def cmd_load_results(wh: Warehouse, args) -> int:
         )
         orchestrate.archive_project(wh, args.project, adapters)
     print(
-        f"loaded {counts.count()} count cells, {seqs.count()} sequences, "
-        f"{assigns.count()} assignments for {args.project}"
+        f"loaded {n_counts} count cells, {n_seqs} sequences, "
+        f"{n_assigns} assignments for {args.project}"
     )
     return 0
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -140,37 +141,45 @@ def dir_probe(projects_dir: str) -> Callable[[str], str]:
     return probe
 
 
+# One status transition row, in this column order. A null field keeps
+# the stored value (the reference's column-wise UPDATEs); a project the
+# table does not know yet is inserted with rerun_as_single_end=0 unless
+# the row sets it (the table DEFAULT, db.py:137-146).
+_TRANSITION = (
+    "project string, status string, rerun_as_single_end int, "
+    "note1 string, note2 string"
+)
+_FLAG = "rerun_as_single_end"
+
+
+def _write_transitions(wh: Warehouse, rows: list[tuple]) -> None:
+    """Apply any number of ``_TRANSITION`` rows in ONE rewrite of the
+    status table: keyed PARTIAL upserts (`projects.py:87-106`) where
+    only the non-null fields of each row change. Rows that leave the
+    flag alone go in without the flag column, so an insert among them
+    gets the table default rather than a null. Every status transition
+    of the lifecycle goes through here."""
+    status = wh.read("status")
+    for flagged in (False, True):
+        part = [r for r in rows if (r[2] is not None) is flagged]
+        if part:
+            upd = local_df(wh.spark, part, _TRANSITION)
+            status = partial_upsert(
+                status, upd if flagged else upd.drop(_FLAG), key="project",
+                defaults={_FLAG: 0},
+            )
+    wh.write("status", status)
+
+
 def set_project_status(
     wh: Warehouse, project: str, status: str, note1: str | None = None,
     note2: str | None = None,
 ) -> None:
-    """One state-machine transition as a keyed PARTIAL upsert
-    (`projects.py:87-106`): only status and any provided notes change —
-    rerun_as_single_end, paired, and unmentioned notes keep their
-    values, exactly like the reference's column-wise UPDATEs. A new
-    project inserts with rerun_as_single_end=0 (the table DEFAULT,
-    db.py:137-146)."""
-    row = local_df(
-        wh.spark,
-        [(project, status, note1, note2)],
-        "project string, status string, note1 string, note2 string",
-    )
-    wh.write(
-        "status",
-        partial_upsert(
-            wh.read("status"), row, key="project",
-            defaults={"rerun_as_single_end": 0},
-        ),
-    )
-
-
-def set_rerun_flag(wh: Warehouse, project: str) -> None:
-    """`projects.py:322-327`: UPDATE status SET rerun_as_single_end=1 —
-    a one-column partial update, nothing else touched."""
-    row = local_df(
-        wh.spark, [(project, 1)], "project string, rerun_as_single_end int"
-    )
-    wh.partial_update("status", row, key="project")
+    """One state-machine transition (`projects.py:87-106`): only status
+    and any provided notes change — rerun_as_single_end, paired, and
+    unmentioned notes keep their values. A new project inserts with
+    rerun_as_single_end=0."""
+    _write_transitions(wh, [(project, status, None, note1, note2)])
 
 
 def initialize_pipeline(wh: Warehouse, project: str, adapters: Adapters) -> None:
@@ -193,25 +202,42 @@ def discard_project(wh: Warehouse, project: str, reason: str) -> None:
     set_project_status(wh, project, "failed", note1=reason)
 
 
+def _refuse_unpaired(unpaired: list[str]) -> None:
+    """`projects.py:315-317`: a project whose stored results are
+    single-ended (paired = 0) cannot be re-run as single-end."""
+    if unpaired:
+        raise ValueError(
+            f"cannot re-run {', '.join(sorted(unpaired))} as single-end; "
+            f"it wasn't paired-end"
+        )
+
+
+def _rerun(
+    adapters: Adapters, project: str, note1: str | None, auto: bool
+) -> tuple:
+    """Rerun_as_single_end's side effects — file prep, then (auto)
+    resubmit — and its whole transition as one row: the flag, the note
+    and the status land together (to_re_run, or running once
+    resubmitted)."""
+    adapters.prepare_rerun(project)
+    if auto:
+        adapters.submit(project)
+    return (project, "running" if auto else "to_re_run", 1, note1, None)
+
+
 def rerun_single_end(
     wh: Warehouse, project: str, adapters: Adapters,
     note1: str | None = None, auto: bool = True,
 ) -> None:
     """`projects.py:313-329` Rerun_as_single_end: refuse if the project
     is known single-ended, prep the files (remove previous DADA outputs
-    + reverse reads — injected, rerun_file_prep for the real form), set
-    rerun_as_single_end=1, transition to to_re_run, and (auto) resubmit.
+    + reverse reads — injected, rerun_file_prep for the real form), and
+    (auto) resubmit; then one status write sets rerun_as_single_end=1,
+    the note, and the status (to_re_run, or running when resubmitted).
     """
-    row = wh.read("status").filter(F.col("project") == project).collect()
-    if row and row[0].paired == 0:
-        raise ValueError(
-            f"cannot re-run {project} as single-end; it wasn't paired-end"
-        )
-    adapters.prepare_rerun(project)
-    set_rerun_flag(wh, project)
-    set_project_status(wh, project, "to_re_run", note1=note1)
-    if auto:
-        run_project(wh, project, adapters)
+    stored = wh.read("status").filter(F.col("project") == project).collect()
+    _refuse_unpaired([r.project for r in stored if r.paired == 0])
+    _write_transitions(wh, [_rerun(adapters, project, note1, auto)])
 
 
 def archive_project(wh: Warehouse, project: str, adapters: Adapters) -> None:
@@ -243,25 +269,57 @@ def determine_projects(
 def advance_projects(
     wh: Warehouse, done: list[str], adapters: Adapters, auto: bool = False
 ) -> dict[str, str]:
-    """`management.py:56-66` + REACT (`projects.py:554-571`): QC each
+    """`management.py:56-66` + REACT (`projects.py:554-571`): QC every
     completed project and take its transition — discard → failed,
-    re_run → to_re_run + resubmit, else complete. Returns the decision
-    per project for reporting."""
-    decisions: dict[str, str] = {}
-    for project in done:
-        summary = adapters.load_summary(project)
-        if summary is None:
-            continue
-        disp = project_disposition(project_qc(sample_qc(summary))).collect()[0]
-        decisions[project] = disp.decision
-        if disp.decision == "discard":
-            discard_project(wh, project, "; ".join(disp.errors))
-        elif disp.decision == "re_run":
-            rerun_single_end(
-                wh, project, adapters, note1="; ".join(disp.errors), auto=auto
-            )
+    re_run → to_re_run (+ resubmit → running under ``auto``), else
+    complete. Returns the decision per project for reporting.
+
+    One batched sweep, not a loop of per-project jobs and writes:
+      * the done projects' summaries are unioned and QC'd, next to
+        each project's stored pairedness, in one ``collect``; a
+        summary with no rows yields no decision;
+      * every re-run is checked against that pairedness first, so a
+        refused single-end re-run raises before ANY project's files
+        or status change (all-or-nothing; a per-project loop would
+        already have committed the projects before it);
+      * the file side effects (``prepare_rerun``, ``submit``) then run
+        per project, in ``done`` order;
+      * all transitions land in ONE atomic status write instead of N
+        sequential ones. A re-run row carries status, note1 and
+        rerun_as_single_end=1 together, so under ``auto=True`` the
+        transient ``to_re_run`` status is never persisted before
+        ``running``; final status, note and flag are those of the
+        per-project helpers.
+    """
+    summaries = [
+        s for s in (adapters.load_summary(p) for p in done) if s is not None
+    ]
+    if not summaries:
+        return {}
+    summary = reduce(DataFrame.unionByName, summaries)
+    stored = wh.read("status").select("project", "paired")
+    disp = {
+        r.project: r
+        for r in project_disposition(project_qc(sample_qc(summary)))
+        .select("project", "decision", "errors")
+        .join(stored, "project", "left")
+        .collect()
+    }
+    decisions = {p: disp[p].decision for p in done if p in disp}
+    _refuse_unpaired(
+        [p for p, d in decisions.items() if d == "re_run" and disp[p].paired == 0]
+    )
+    rows = []
+    for project, decision in decisions.items():
+        note = "; ".join(disp[project].errors)
+        if decision == "discard":
+            rows.append((project, "failed", None, note, None))
+        elif decision == "re_run":
+            rows.append(_rerun(adapters, project, note, auto))
         else:
-            set_project_status(wh, project, "complete")
+            rows.append((project, "complete", None, None, None))
+    if rows:
+        _write_transitions(wh, rows)
     return decisions
 
 

@@ -177,7 +177,7 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "cand_id", "qd_micro", "ce", "cn"
     )
 
-    def greedy(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def greedy(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("cand_id", ignore_index=True)  # tie order
         m = len(pdf)
         emb_m = np.array(pdf["ce"].tolist(), dtype=np.float64)  # (m, DIM)

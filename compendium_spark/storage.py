@@ -20,6 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from compendium_spark.localframe import local_df
 from compendium_spark.operators.merge import partial_update, upsert
 from compendium_spark.operators.validate import validate_schema
 from compendium_spark.schemas import ALL_TABLES
@@ -67,13 +68,18 @@ class Warehouse:
     def exists(self, name: str) -> bool:
         return (self.path(name) / "_SUCCESS").exists()
 
+    def _empty(self, name: str) -> DataFrame:
+        """An empty frame with ``name``'s declared schema, framed by
+        ``local_df``: a ``LocalTableScan`` on the JVM side, so writing
+        or reading it never starts a Python worker."""
+        return local_df(self.spark, [], self.tables[name])
+
     def init_tables(self) -> None:
         """Idempotent: create any missing table as an empty parquet
         dataset with its declared schema."""
-        for name, schema in self.tables.items():
+        for name in self.tables:
             if not self.exists(name):
-                empty = self.spark.createDataFrame([], schema)
-                self._writer(name, empty).mode("overwrite").parquet(
+                self._writer(name, self._empty(name)).mode("overwrite").parquet(
                     str(self.path(name))
                 )
 
@@ -84,7 +90,7 @@ class Warehouse:
 
     def read(self, name: str) -> DataFrame:
         if not self.exists(name):
-            return self.spark.createDataFrame([], self.tables[name])
+            return self._empty(name)
         df = self.spark.read.schema(self.tables[name]).parquet(str(self.path(name)))
         # partition discovery may reorder columns; restore declared order
         return df.select(*[f.name for f in self.tables[name].fields])

@@ -86,6 +86,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from compendium_spark.localframe import local_df
 from compendium_spark.operators.merge import partial_update, upsert
 from compendium_spark.operators.validate import validate_schema
 from compendium_spark.schemas import ALL_TABLES
@@ -794,7 +795,7 @@ class VersionedWarehouse:
             )
             out = df if out is None else out.unionByName(df)
         if out is None:  # a snapshot can legitimately be empty
-            return self.spark.createDataFrame([], schema)
+            return local_df(self.spark, [], schema)
         return out
 
     def scan_files(
@@ -848,7 +849,7 @@ class VersionedWarehouse:
             version = self.version_at(name, as_of)
         v = self.latest(name) if version is None else version
         if v is None:
-            df = self.spark.createDataFrame([], self.table_schema(name))
+            df = local_df(self.spark, [], self.table_schema(name))
         else:
             kept, _ = self.scan_files(name, v, where)
             df = self._read_files(name, kept, self.table_schema(name, v))
@@ -1054,7 +1055,7 @@ class VersionedWarehouse:
         upd_parts = (
             updates.select(pcol)
             if pcol in updates.columns
-            else self.spark.createDataFrame([], f"{pcol} string")
+            else local_df(self.spark, [], f"{pcol} string")
         )
         # key -> current-partition mapping. The naive source is a full
         # table scan per merge — O(table), the dominant cost of a

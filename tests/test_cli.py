@@ -26,6 +26,19 @@ EFETCH = """<R><EXPERIMENT_PACKAGE><SAMPLE accession="SRS001"/>
 </EXPERIMENT_PACKAGE></R>"""
 
 
+def _write_results(d):
+    """A finished project's result files: 3 non-zero count cells, 2
+    amplicons cut from the v4 region, their taxonomy."""
+    d.mkdir()
+    (d / "ASVs_counts.tsv").write_text("\tSRR100\tSRR200\nASV_1\t10\t0\nASV_2\t3\t7\n")
+    (d / "ASVs.fa").write_text(f">ASV_1\n{WHOLE_16S[570:690]}\n>ASV_2\n{WHOLE_16S[572:688]}\n")
+    (d / "ASVs_taxonomy.tsv").write_text(
+        "\tKingdom\tPhylum\tClass\tOrder\tFamily\tGenus\n"
+        "ASV_1\tBacteria\tB\tC\tD\tE\tF\nASV_2\tBacteria\tB\tC\tD\tE\tG\n"
+    )
+    return d
+
+
 @pytest.fixture(scope="module")
 def wh_dir(tmp_path_factory):
     return str(tmp_path_factory.mktemp("warehouse"))
@@ -73,14 +86,7 @@ def test_full_command_flow(spark, wh_dir, tmp_path, capsys):
     assert "decision=save" in capsys.readouterr().out
 
     # load results
-    d = tmp_path / "PRJ1"
-    d.mkdir()
-    (d / "ASVs_counts.tsv").write_text("\tSRR100\tSRR200\nASV_1\t10\t0\nASV_2\t3\t7\n")
-    (d / "ASVs.fa").write_text(f">ASV_1\n{WHOLE_16S[570:690]}\n>ASV_2\n{WHOLE_16S[572:688]}\n")
-    (d / "ASVs_taxonomy.tsv").write_text(
-        "\tKingdom\tPhylum\tClass\tOrder\tFamily\tGenus\n"
-        "ASV_1\tBacteria\tB\tC\tD\tE\tF\nASV_2\tBacteria\tB\tC\tD\tE\tG\n"
-    )
+    d = _write_results(tmp_path / "PRJ1")
     # with --archive-dir the full lifecycle tail runs:
     # complete → archived → done (projects.py:525-551)
     assert run(
@@ -312,3 +318,164 @@ def test_progress_report_golden(spark, wh_dir, tmp_path, capsys):
     assert run(spark, wh_dir, "progress", "PRJX", "--projects-dir", str(pdir)) == 0
     out = capsys.readouterr().out
     assert out.strip().endswith("DONE!")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_empty_tables_are_local_scans(spark, tmp_path, monkeypatch):
+    """init_tables and the read of a missing table frame their empty
+    tables as a JVM-side LocalTableScan (no Python RDD), and every
+    table, partitioned or not, reads back with its declared schema."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for name, schema in wh.tables.items():
+        missing = wh.read(name)
+        assert "LocalTableScan" in _plan(missing), name
+        assert "ExistingRDD" not in _plan(missing), name
+        assert missing.schema == schema
+
+    written: dict[str, str] = {}
+    orig = Warehouse._writer
+
+    def spy(self, name, df):
+        written[name] = _plan(df)
+        return orig(self, name, df)
+
+    monkeypatch.setattr(Warehouse, "_writer", spy)
+    wh.init_tables()
+    assert set(written) == set(wh.tables)
+    for name, plan in written.items():
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, name
+
+    def fields(st):
+        return [(f.name, f.dataType) for f in st.fields]
+
+    for name, schema in wh.tables.items():
+        got = wh.read(name)
+        assert fields(got.schema) == fields(schema), name
+        assert got.count() == 0
+
+
+def _ingest(spark, wh_dir, tmp_path):
+    xml = tmp_path / "bs.xml"
+    xml.write_text(XML)
+    mock = tmp_path / "efetch.xml"
+    mock.write_text(EFETCH)
+    assert run(spark, wh_dir, "init") == 0
+    assert run(spark, wh_dir, "xml", "txid408170", str(xml)) == 0
+    return xml, mock
+
+
+def test_runs_collapses_repeated_staged_samples(spark, tmp_path, capsys):
+    """--per-query below the sample count makes several batches, and
+    --mock-xml answers each with the whole file, so every sample is
+    staged once per batch. The merge must still leave one row per
+    sample, enriched with the fetched fields."""
+    wh_dir = str(tmp_path / "wh")
+    _, mock = _ingest(spark, wh_dir, tmp_path)
+    capsys.readouterr()
+    assert run(spark, wh_dir, "runs", "--per-query", "1", "--mock-xml", str(mock)) == 0
+    assert "updated 2 samples" in capsys.readouterr().out
+    rows = Warehouse(spark, wh_dir).read("samples").collect()
+    assert len(rows) == 2
+    got = {
+        r.srs: (r.srr, r.project, r.library_strategy, r.library_source, r.taxon)
+        for r in rows
+    }
+    assert got == {
+        "SRS001": (["SRR100"], "PRJ1", "AMPLICON", "GENOMIC", "txid408170"),
+        "SRS002": (["SRR200", "SRR201"], "PRJ1", "AMPLICON", "METAGENOMIC", "txid408170"),
+    }
+
+
+def test_collapse_staged_later_non_null_fields_win():
+    from compendium_spark.cli import _collapse_staged
+
+    blank = dict.fromkeys(
+        ["srr", "project", "library_strategy", "library_source", "pubdate",
+         "total_bases", "instrument"]
+    )
+    staged = [
+        {**blank, "srs": "S1", "srr": ["A"], "project": "P1", "total_bases": 5},
+        {**blank, "srs": "S2", "srr": ["C"]},
+        {**blank, "srs": "S1", "srr": ["B"], "instrument": "X"},
+    ]
+    assert _collapse_staged(staged) == [
+        ("S1", ["B"], "P1", None, None, None, 5, "X"),
+        ("S2", ["C"], None, None, None, None, None, None),
+    ]
+
+
+def test_printed_counts_equal_table_deltas(spark, tmp_path, capsys):
+    """xml, tags and load-results print counts observed on their write
+    jobs; each must equal the rows its tables gained."""
+    import re
+
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir)
+
+    def sizes(*names):
+        return [wh.read(n).count() for n in names]
+
+    def printed(pattern):
+        return [int(x) for x in re.search(pattern, capsys.readouterr().out).groups()]
+
+    xml, _ = _ingest(spark, wh_dir, tmp_path)
+    assert printed(r"saved (\d+) new samples") == sizes("samples") == [2]
+
+    assert run(spark, wh_dir, "tags", "txid408170", str(xml)) == 0
+    (n_tags,) = printed(r"saved tags for new samples: (\d+) rows")
+    assert n_tags == wh.read("tags").count() > 0
+
+    d = _write_results(tmp_path / "PRJ1")
+    tables = ("asv_counts", "asv_sequences", "asv_assignments")
+    before = sizes(*tables)
+    assert run(spark, wh_dir, "load-results", "PRJ1", "--dir", str(d)) == 0
+    got = printed(r"loaded (\d+) count cells, (\d+) sequences, (\d+) assignments")
+    assert got == [a - b for a, b in zip(sizes(*tables), before)] == [3, 2, 2]
+
+
+def test_asvs_runs_region_kernel_once_per_project(spark, tmp_path, capsys, monkeypatch):
+    """The region kernel is the lifecycle's only CPU-bound step: asvs
+    must run it exactly once per project, store and print the same
+    results. Each kernel call appends its project to a marker file
+    (the wrapper is shipped to the Python workers with the grouped-map
+    function)."""
+    from compendium_spark.pipeline import amplicon
+
+    marker = str(tmp_path / "kernel_calls")
+    orig = amplicon.process_project
+
+    def counted(asvs):
+        with open(marker, "a") as f:
+            f.write(f"{len(asvs)}\n")
+        return orig(asvs)
+
+    monkeypatch.setattr(amplicon, "process_project", counted)
+
+    wh_dir = str(tmp_path / "wh")
+    assert run(spark, wh_dir, "init") == 0
+    wh = Warehouse(spark, wh_dir)
+    wh.append(
+        "asv_sequences",
+        spark.createDataFrame(
+            [
+                (1, "P1", "ASV_1", WHOLE_16S[570:690]),
+                (2, "P1", "ASV_2", WHOLE_16S[572:688]),
+                (3, "P2", "ASV_1", WHOLE_16S[571:689]),
+            ],
+            "asv_id long, project string, asv string, seq string",
+        ),
+    )
+    capsys.readouterr()
+    assert run(spark, wh_dir, "asvs") == 0
+    out = capsys.readouterr().out
+    with open(marker) as f:
+        assert sorted(f.read().split()) == ["1", "2"]  # one call per project
+    stored = {r.project: r.region for r in wh.read("asv_inference").collect()}
+    assert stored == {"P1": "v4", "P2": "v4"}
+    assert sorted(out.splitlines()) == sorted(
+        f"{r.project}: {r.region}, {r.length}"
+        for r in wh.read("asv_inference").collect()
+    )

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from compendium_spark.functions.qc import project_disposition, project_qc, sample_qc
 from compendium_spark.pipeline.orchestrate import (
     Adapters,
     advance_projects,
@@ -25,6 +26,7 @@ from compendium_spark.storage import Warehouse
 
 GOOD_ROW = "SRR{i}_1.fastq\t50000\t48000\t47000\t46500\t45000\t44800\t44000\n"
 BAD_ROW = "SRR{i}_1.fastq\t50000\t48000\t47000\t46500\t20000\t44800\t44000\n"
+CHIMERIC_ROW = "SRR{i}_1.fastq\t50000\t48000\t47000\t46500\t45000\t44800\t5000\n"
 HEADER = "\tdinput\tfilter\tforwd\trevse\tmerged\tlength\tnonchim\n"
 
 
@@ -223,3 +225,91 @@ def test_autoforward_fills_capacity(spark, wh, tmp_path):
     result2 = autoforward(wh, a, max_projects=2)
     assert result2["launched"] == []
     assert result2["not_done"] == ["PRJNEW"]
+
+
+SWEEP = {"PRJBAD": BAD_ROW, "PRJGOOD": GOOD_ROW, "PRJCHIM": CHIMERIC_ROW}
+
+
+def _status(wh):
+    return {
+        r.project: (r.status, r.rerun_as_single_end, r.paired, r.note1, r.note2)
+        for r in wh.read("status").collect()
+    }
+
+
+@pytest.mark.parametrize("auto", [False, True])
+def test_forward_sweep_one_status_write_matches_per_project_path(
+    spark, wh, tmp_path, monkeypatch, auto
+):
+    """One batched sweep writes `status` exactly once, and lands the
+    same decisions, statuses, notes and re-run flags as the
+    single-project helpers applied one project at a time."""
+    per_project = Warehouse(spark, str(tmp_path / "wh_per_project"))
+    per_project.init_tables()
+    log = []
+    a = _adapters(spark, tmp_path, log)
+    for p, rows in SWEEP.items():
+        _mk_project(tmp_path, p, rows)
+        for w in (wh, per_project):
+            initialize_pipeline(w, p, a)
+            run_project(w, p, a)
+    done = list(SWEEP)
+
+    writes = []
+    write = Warehouse.write
+
+    def spy(self, name, df):
+        writes.append(name)
+        return write(self, name, df)
+
+    monkeypatch.setattr(Warehouse, "write", spy)
+    decisions = advance_projects(wh, done, a, auto=auto)
+    monkeypatch.undo()
+    assert writes == ["status"]
+    assert decisions == {"PRJBAD": "re_run", "PRJGOOD": "save", "PRJCHIM": "discard"}
+
+    for p in done:
+        d = project_disposition(project_qc(sample_qc(a.load_summary(p)))).collect()[0]
+        note = "; ".join(d.errors)
+        if d.decision == "discard":
+            discard_project(per_project, p, note)
+        elif d.decision == "re_run":
+            rerun_single_end(per_project, p, a, note1=note, auto=auto)
+        else:
+            set_project_status(per_project, p, "complete")
+    assert _status(wh) == _status(per_project)
+    got = _status(wh)
+    assert got["PRJBAD"][:2] == ("running" if auto else "to_re_run", 1)
+    assert got["PRJCHIM"][0] == "failed" and "chimeric" in got["PRJCHIM"][3]
+    assert got["PRJGOOD"][:2] == ("complete", 0)
+
+
+def test_forward_sweep_refusal_changes_nothing(spark, wh, tmp_path):
+    """A refused single-end re-run (paired = 0) raises before any
+    project's files or status change — including the re-run and the
+    save that come before it in the sweep."""
+    log = []
+    a = _adapters(spark, tmp_path, log)
+    a.prepare_rerun = rerun_file_prep(str(tmp_path / "projects"))
+    done = ["PRJBAD", "PRJGOOD", "PRJSINGLE"]
+    for p, rows in (("PRJBAD", BAD_ROW), ("PRJGOOD", GOOD_ROW), ("PRJSINGLE", BAD_ROW)):
+        _mk_project(tmp_path, p, rows)
+        fq = tmp_path / "projects" / p / "fastq"
+        fq.mkdir()
+        (fq / "SRR0_1.fastq").write_text("@r\nACGT\n+\n!!!!\n")
+        (fq / "SRR0_2.fastq").write_text("@r\nACGT\n+\n!!!!\n")
+        initialize_pipeline(wh, p, a)
+        run_project(wh, p, a)
+    paired = spark.createDataFrame([("PRJSINGLE", 0)], "project string, paired int")
+    wh.partial_update("status", paired, key="project")
+
+    def files():
+        root = tmp_path / "projects"
+        return sorted(str(f.relative_to(root)) for f in root.rglob("*"))
+
+    before_files, before_status, before_log = files(), _status(wh), list(log)
+    with pytest.raises(ValueError, match="PRJSINGLE as single-end"):
+        advance_projects(wh, done, a, auto=True)
+    assert files() == before_files
+    assert _status(wh) == before_status
+    assert log == before_log
