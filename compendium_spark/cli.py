@@ -262,8 +262,11 @@ def cmd_asvs(wh: Warehouse, args) -> int:
 
 def cmd_eval(wh: Warehouse, args) -> int:
     summ = read_summary(wh.spark, args.summary, project=args.project)
-    disp = project_disposition(project_qc(sample_qc(summ)))
-    r = disp.collect()[0]
+    rows = project_disposition(project_qc(sample_qc(summ))).collect()
+    if not rows:
+        print(f"Project {args.project}: no samples in {args.summary}")
+        return 1
+    r = rows[0]
     print(f"Project {r.project}: {r.sample_count} samples, decision={r.decision}")
     for e in r.errors:
         print(f"  {e}")

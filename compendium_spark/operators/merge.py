@@ -6,6 +6,12 @@ The reference's write path is point UPDATEs against SQLite:
     overwrite (`db.py:440-470` — the update dict is built per row from
     whatever the eUtils response contained)
 
+This module serves the distributed tables (enrichment sweeps, result
+loads). Status transitions do not come here: `status` is a
+|projects|-row control table, so `pipeline.status.apply_transitions`
+merges them on the driver and the warehouse commits the result as one
+Arrow write, with no Spark job.
+
 Without Delta's MERGE INTO (jar not in this image), the engine
 emulates MERGE as: target LEFT-ANTI updates ∪ (target ⋈ updates with
 per-column COALESCE) ∪ new rows. This is the standard CDC emulation
@@ -14,8 +20,8 @@ is idempotent — re-applying the same update batch yields the same
 table, which is what makes speculative task retries safe around
 side-effecting fetch stages (SURVEY §4 note 1).
 
-Scale: the updates side is typically small (a fetch batch, a status
-sweep) → broadcast join against the keyed target; the target is never
+Scale: the updates side is typically small (a fetch batch, a result
+load) → broadcast join against the keyed target; the target is never
 shuffled, only rewritten partition-wise.
 """
 
@@ -31,30 +37,6 @@ def upsert(target: DataFrame, updates: DataFrame, key: str | list[str]) -> DataF
     keys = [key] if isinstance(key, str) else list(key)
     kept = target.join(updates.select(*keys), on=keys, how="left_anti")
     return kept.unionByName(updates.select(*target.columns))
-
-
-def partial_upsert(
-    target: DataFrame,
-    updates: DataFrame,
-    key: str | list[str],
-    defaults: dict | None = None,
-) -> DataFrame:
-    """Partial-update existing keys (non-null update fields only — the
-    reference's column-wise `UPDATE status SET ...` at
-    projects.py:87-106 never touches unmentioned columns) and INSERT
-    unknown keys with ``defaults`` for absent columns (the reference's
-    registration INSERT supplies DEFAULT 0 for rerun_as_single_end,
-    db.py:137-146). One keyed broadcast merge covers both the
-    registration and every later transition."""
-    keys = [key] if isinstance(key, str) else list(key)
-    defaults = defaults or {}
-    merged = partial_update(target, updates, key)
-    new = updates.join(target.select(*keys), on=keys, how="left_anti")
-    for c in target.columns:
-        if c not in new.columns:
-            new = new.withColumn(c, F.lit(defaults.get(c)))
-    schema_cast = [F.col(c).cast(t) for c, t in target.dtypes]
-    return merged.unionByName(new.select(*schema_cast))
 
 
 def partial_update(
@@ -110,14 +92,17 @@ def merge_into_sql(
     this image, so the seam is pinned by statement-construction tests
     (tests/test_merge_property.py) rather than an integration run;
     the SEMANTICS (what the statement must do) are pinned by the same
-    emulation tests that gate upsert/partial_update.
+    emulation tests that gate upsert/partial_update, and by the
+    dict-model test of ``pipeline.status.apply_transitions``.
 
-    ``partial=True`` reproduces partial_update/partial_upsert: each
-    update column overwrites only when the source value is non-null
-    (the reference's dynamic per-field UPDATE, db.py:445-462).
-    ``insert_cols`` enables the WHEN NOT MATCHED INSERT arm
-    (partial_upsert / upsert); omit it for the pure-UPDATE form whose
-    unknown keys are silently dropped (partial_update / SURVEY §7.4).
+    ``partial=True`` reproduces partial_update (and the driver-side
+    ``apply_transitions``): each update column overwrites only when the
+    source value is non-null (the reference's dynamic per-field UPDATE,
+    db.py:445-462). ``insert_cols`` enables the WHEN NOT MATCHED INSERT
+    arm (upsert, or ``apply_transitions``' registration insert, whose
+    absent columns take the table DEFAULTs); omit it for the
+    pure-UPDATE form whose unknown keys are silently dropped
+    (partial_update / SURVEY §7.4).
     """
     keys = [key] if isinstance(key, str) else list(key)
     bad = [c for c in update_cols if c in keys]

@@ -6,6 +6,11 @@ Side effects (git clone, sbatch, filesystem probes) are injected as
 `Adapters` callables — the engine stays pure DataFrame transforms and
 the orchestration loop touches at most `max_projects` driver-side rows
 (SURVEY §7.4: collect() only for ≤max_projects orchestration rows).
+
+The `status` control table is read and committed on the driver
+(`Warehouse.read_arrow`, an Arrow `Warehouse.write`): a transition,
+the pairedness check and the non-terminal listing start no Spark job.
+The QC sweep and the report queries stay Spark jobs.
 """
 
 from __future__ import annotations
@@ -17,12 +22,13 @@ from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from compendium_spark.functions.qc import project_disposition, project_qc, sample_qc
-from compendium_spark.localframe import local_df
-from compendium_spark.operators.merge import partial_upsert
-from compendium_spark.pipeline.status import find_todo, non_terminal_projects
+from compendium_spark.pipeline.status import (
+    apply_transitions,
+    find_todo,
+    non_terminal_projects,
+)
 from compendium_spark.storage import Warehouse
 
 MAX_PROJECTS = 8  # config_template.py:17
@@ -141,34 +147,13 @@ def dir_probe(projects_dir: str) -> Callable[[str], str]:
     return probe
 
 
-# One status transition row, in this column order. A null field keeps
-# the stored value (the reference's column-wise UPDATEs); a project the
-# table does not know yet is inserted with rerun_as_single_end=0 unless
-# the row sets it (the table DEFAULT, db.py:137-146).
-_TRANSITION = (
-    "project string, status string, rerun_as_single_end int, "
-    "note1 string, note2 string"
-)
-_FLAG = "rerun_as_single_end"
-
-
 def _write_transitions(wh: Warehouse, rows: list[tuple]) -> None:
-    """Apply any number of ``_TRANSITION`` rows in ONE rewrite of the
-    status table: keyed PARTIAL upserts (`projects.py:87-106`) where
-    only the non-null fields of each row change. Rows that leave the
-    flag alone go in without the flag column, so an insert among them
-    gets the table default rather than a null. Every status transition
-    of the lifecycle goes through here."""
-    status = wh.read("status")
-    for flagged in (False, True):
-        part = [r for r in rows if (r[2] is not None) is flagged]
-        if part:
-            upd = local_df(wh.spark, part, _TRANSITION)
-            status = partial_upsert(
-                status, upd if flagged else upd.drop(_FLAG), key="project",
-                defaults={_FLAG: 0},
-            )
-    wh.write("status", status)
+    """Apply any number of transition rows
+    (``status.TRANSITION_FIELDS``) in ONE rewrite of the status table,
+    computed and committed on the driver (``apply_transitions``, then
+    an Arrow ``wh.write``). Every status transition of the lifecycle
+    goes through here."""
+    wh.write("status", apply_transitions(wh.read_arrow("status"), rows))
 
 
 def set_project_status(
@@ -235,8 +220,8 @@ def rerun_single_end(
     (auto) resubmit; then one status write sets rerun_as_single_end=1,
     the note, and the status (to_re_run, or running when resubmitted).
     """
-    stored = wh.read("status").filter(F.col("project") == project).collect()
-    _refuse_unpaired([r.project for r in stored if r.paired == 0])
+    stored = wh.read_arrow("status").to_pylist()
+    _refuse_unpaired([project for r in stored if r["project"] == project and r["paired"] == 0])
     _write_transitions(wh, [_rerun(adapters, project, note1, auto)])
 
 
@@ -257,9 +242,8 @@ def determine_projects(
 ) -> tuple[list[str], list[str], list[str]]:
     """`management.py:8-39`: classify every non-terminal project via
     the injected filesystem probe → (done, running, not_done)."""
-    projects = [r.project for r in non_terminal_projects(wh.read("status")).collect()]
     done, running, not_done = [], [], []
-    for p in projects:
+    for p in non_terminal_projects(wh.read_arrow("status")):
         {"done": done, "running": running, "not_done": not_done}[
             adapters.probe(p)
         ].append(p)
@@ -275,17 +259,17 @@ def advance_projects(
     complete. Returns the decision per project for reporting.
 
     One batched sweep, not a loop of per-project jobs and writes:
-      * the done projects' summaries are unioned and QC'd, next to
-        each project's stored pairedness, in one ``collect``; a
-        summary with no rows yields no decision;
-      * every re-run is checked against that pairedness first, so a
+      * the done projects' summaries are unioned and QC'd in one
+        ``collect``; a summary with no rows yields no decision;
+      * every re-run is checked against the stored pairedness (read
+        on the driver) first, so a
         refused single-end re-run raises before ANY project's files
         or status change (all-or-nothing; a per-project loop would
         already have committed the projects before it);
       * the file side effects (``prepare_rerun``, ``submit``) then run
         per project, in ``done`` order;
-      * all transitions land in ONE atomic status write instead of N
-        sequential ones. A re-run row carries status, note1 and
+      * all transitions land in ONE driver-side status commit instead
+        of N sequential ones. A re-run row carries status, note1 and
         rerun_as_single_end=1 together, so under ``auto=True`` the
         transient ``to_re_run`` status is never persisted before
         ``running``; final status, note and flag are those of the
@@ -297,17 +281,16 @@ def advance_projects(
     if not summaries:
         return {}
     summary = reduce(DataFrame.unionByName, summaries)
-    stored = wh.read("status").select("project", "paired")
     disp = {
         r.project: r
         for r in project_disposition(project_qc(sample_qc(summary)))
         .select("project", "decision", "errors")
-        .join(stored, "project", "left")
         .collect()
     }
     decisions = {p: disp[p].decision for p in done if p in disp}
+    paired = {r["project"]: r["paired"] for r in wh.read_arrow("status").to_pylist()}
     _refuse_unpaired(
-        [p for p, d in decisions.items() if d == "re_run" and disp[p].paired == 0]
+        [p for p, d in decisions.items() if d == "re_run" and paired.get(p) == 0]
     )
     rows = []
     for project, decision in decisions.items():

@@ -4,41 +4,50 @@
 The reference drives a per-project lifecycle column
 (`status.status`: initialized → accession_list_created → running →
 [to_re_run|complete] → archived → done | failed; README.md:102-111)
-via point UPDATEs. Here every transition is a keyed upsert on the
-`status` DataFrame, and the selection queries are pure transforms.
+via point UPDATEs. Here `status` is a driver-held control table (one
+row per project): `apply_transitions` computes a batch of transitions
+on the driver against the stored rows as a pyarrow Table, and
+`pipeline.orchestrate` commits the result as one Arrow write of the
+table — no Spark job per transition. The non-terminal listing reads
+the same driver-side rows; the project picker and the report queries
+are pure DataFrame transforms.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from compendium_spark.localframe import local_df
-from compendium_spark.operators.merge import upsert
 from compendium_spark.schemas import TERMINAL_STATUSES
 
+# One transition row holds these fields, in this order. A null field
+# keeps the stored value.
+TRANSITION_FIELDS = ("project", "status", "rerun_as_single_end", "note1", "note2")
 
-def non_terminal_projects(status: DataFrame) -> DataFrame:
-    """P5 (`management.py:17-20`): WHERE status NOT IN ('done','failed')."""
-    return status.filter(~F.col("status").isin(*TERMINAL_STATUSES)).select("project")
+
+def non_terminal_projects(status: pa.Table) -> list[str]:
+    """P5 (`management.py:17-20`): WHERE status NOT IN ('done','failed'),
+    over the stored rows on the driver."""
+    return [r["project"] for r in status.to_pylist() if r["status"] not in TERMINAL_STATUSES]
 
 
-def set_status(status: DataFrame, project: str, new_status: str) -> DataFrame:
-    """One transition (`projects.py:87-106`): upsert (project, status)."""
-    spark = status.sparkSession
-    update = local_df(
-        spark, [(project, new_status, 0, None, None, None)], status.schema
-    )
-    existing = status.filter(F.col("project") == project)
-    if existing.limit(1).count() > 0:
-        merged = status.withColumn(
-            "status",
-            F.when(F.col("project") == project, F.lit(new_status)).otherwise(
-                F.col("status")
-            ),
-        )
-        return merged
-    return upsert(status, update, key="project")
+def apply_transitions(status: pa.Table, rows: list[tuple]) -> pa.Table:
+    """Apply ``TRANSITION_FIELDS`` rows, in order, to the stored status
+    table: the reference's column-wise UPDATEs (`projects.py:87-106`),
+    where only a row's non-null fields change, and its registration
+    INSERT for a project the table does not know yet, which gets
+    rerun_as_single_end=0 unless the row sets it (the table DEFAULT,
+    db.py:137-146). `paired` and the notes a row leaves null keep
+    their stored values. Stored rows keep their order; new projects
+    follow in transition order. Pure: returns a new Table with
+    ``status``'s schema."""
+    by_project = {r["project"]: r for r in status.to_pylist()}
+    for row in rows:
+        new = dict.fromkeys(status.column_names) | {"project": row[0], "rerun_as_single_end": 0}
+        stored = by_project.setdefault(row[0], new)
+        stored.update((k, v) for k, v in zip(TRANSITION_FIELDS, row) if v is not None)
+    return pa.Table.from_pylist(list(by_project.values()), schema=status.schema)
 
 
 def eligible_samples(samples: DataFrame, project: str | None = None) -> DataFrame:

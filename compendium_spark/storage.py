@@ -7,6 +7,13 @@ CREATE TABLE IF NOT EXISTS); writes go through a staging directory so
 a table can be rewritten from a plan that reads it (no partial state
 on failure).
 
+Two write paths share that staging-and-swap commit. A DataFrame is
+written by a Spark job. A pyarrow Table is written by the driver as
+one parquet file, with no Spark job: the DDL's empty tables and the
+`status` control table's transitions (one row per project, committed
+by `pipeline.orchestrate`) take this path, and `read_arrow` is its
+driver-side reader. Distributed data keeps the Spark path.
+
 At scale the warehouse maps onto a real catalog (saveAsTable +
 partitioning: samples by project prefix, asv_counts bucketed by
 sample); the parquet-dir form keeps the engine dependency-free here.
@@ -15,14 +22,17 @@ sample); the parquet-dir form keeps the engine dependency-free here.
 from __future__ import annotations
 
 import shutil
+from collections.abc import Callable
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from compendium_spark.localframe import local_df
 from compendium_spark.operators.merge import partial_update, upsert
-from compendium_spark.operators.validate import validate_schema
+from compendium_spark.operators.validate import validate_arrow, validate_schema
 from compendium_spark.schemas import ALL_TABLES
 
 # Tables stored hive-partitioned on their natural partition key. An
@@ -68,20 +78,13 @@ class Warehouse:
     def exists(self, name: str) -> bool:
         return (self.path(name) / "_SUCCESS").exists()
 
-    def _empty(self, name: str) -> DataFrame:
-        """An empty frame with ``name``'s declared schema, framed by
-        ``local_df``: a ``LocalTableScan`` on the JVM side, so writing
-        or reading it never starts a Python worker."""
-        return local_df(self.spark, [], self.tables[name])
-
     def init_tables(self) -> None:
         """Idempotent: create any missing table as an empty parquet
-        dataset with its declared schema."""
+        dataset with its declared schema, committed from the driver
+        (no Spark job)."""
         for name in self.tables:
             if not self.exists(name):
-                self._writer(name, self._empty(name)).mode("overwrite").parquet(
-                    str(self.path(name))
-                )
+                self.write(name, to_arrow_schema(self.tables[name]).empty_table())
 
     def _writer(self, name: str, df: DataFrame):
         pcol = PARTITION_SPEC.get(name)
@@ -90,22 +93,69 @@ class Warehouse:
 
     def read(self, name: str) -> DataFrame:
         if not self.exists(name):
-            return self._empty(name)
+            # an empty LocalTableScan: reading it starts no Python worker
+            return local_df(self.spark, [], self.tables[name])
         df = self.spark.read.schema(self.tables[name]).parquet(str(self.path(name)))
         # partition discovery may reorder columns; restore declared order
         return df.select(*[f.name for f in self.tables[name].fields])
 
-    def write(self, name: str, df: DataFrame) -> None:
-        """Full overwrite via staging dir (safe when df reads the
-        target table). Schema-validated: a drifted ingest fails here,
-        not at the next read."""
-        df = validate_schema(df, self.tables[name], name)
+    def read_arrow(self, name: str) -> pa.Table:
+        """``name`` read on the driver as a pyarrow Table with its
+        declared schema, whichever path wrote it; a missing table reads
+        as an empty one. No Spark job — for driver-sized, unpartitioned
+        control tables such as `status`."""
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        if name in PARTITION_SPEC:
+            raise ValueError(f"table {name!r} is partitioned: read it with read()")
+        schema = to_arrow_schema(self.tables[name])
+        if not self.exists(name):
+            return schema.empty_table()
+        return pq.read_table(self.path(name), schema=schema)
+
+    def _commit(self, name: str, stage: Callable[[Path], None]) -> None:
+        """Run ``stage(staging_dir)`` to write a full new copy of
+        ``name``, then swap it in for the live table. A staging
+        directory left by an interrupted write is cleared first."""
         target = self.path(name)
         staging = target.with_suffix(".staging")
-        self._writer(name, df).mode("overwrite").parquet(str(staging))
+        if staging.exists():
+            shutil.rmtree(staging)
+        stage(staging)
         if target.exists():
             shutil.rmtree(target)
         staging.rename(target)
+
+    def write(self, name: str, data: DataFrame | pa.Table) -> None:
+        """Full overwrite via staging dir (safe when ``data`` reads the
+        target table). Schema-validated: a drifted ingest fails here,
+        not at the next read, and before anything is staged.
+
+        A DataFrame is written by a Spark job. A pyarrow Table is
+        committed by the driver as one ``part-00000.snappy.parquet``
+        plus ``_SUCCESS``, with no Spark job. A partitioned table takes
+        only an empty Table, staged as ``_SUCCESS`` alone (the layout
+        Spark writes for an empty partitioned frame)."""
+        if not isinstance(data, pa.Table):
+            df = validate_schema(data, self.tables[name], name)
+            self._commit(
+                name, lambda d: self._writer(name, df).mode("overwrite").parquet(str(d))
+            )
+            return
+        tbl = validate_arrow(data, to_arrow_schema(self.tables[name]), name)
+        partitioned = name in PARTITION_SPEC
+        if partitioned and tbl.num_rows:
+            raise ValueError(f"table {name!r} is partitioned: write its rows as a DataFrame")
+
+        def stage(staging: Path) -> None:
+            import pyarrow.parquet as pq  # noqa: PLC0415
+
+            staging.mkdir(parents=True)
+            if not partitioned:
+                pq.write_table(tbl, staging / "part-00000.snappy.parquet", compression="snappy")
+            (staging / "_SUCCESS").touch()
+
+        self._commit(name, stage)
 
     def append(self, name: str, df: DataFrame) -> None:
         df = validate_schema(df, self.tables[name], name)

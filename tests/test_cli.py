@@ -324,10 +324,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_empty_tables_are_local_scans(spark, tmp_path, monkeypatch):
-    """init_tables and the read of a missing table frame their empty
-    tables as a JVM-side LocalTableScan (no Python RDD), and every
-    table, partitioned or not, reads back with its declared schema."""
+def test_empty_tables_are_local_scans(spark, tmp_path, spark_jobs):
+    """The read of a missing table frames its empty table as a
+    JVM-side LocalTableScan (no Python RDD). init_tables starts no
+    Spark job: it commits every table from the driver, in Spark's
+    layout for an empty frame (one empty parquet file, or `_SUCCESS`
+    alone for a partitioned table), and every table reads back with
+    its declared schema."""
+    from compendium_spark.storage import PARTITION_SPEC
+
     wh = Warehouse(spark, str(tmp_path / "wh"))
     for name, schema in wh.tables.items():
         missing = wh.read(name)
@@ -335,23 +340,19 @@ def test_empty_tables_are_local_scans(spark, tmp_path, monkeypatch):
         assert "ExistingRDD" not in _plan(missing), name
         assert missing.schema == schema
 
-    written: dict[str, str] = {}
-    orig = Warehouse._writer
-
-    def spy(self, name, df):
-        written[name] = _plan(df)
-        return orig(self, name, df)
-
-    monkeypatch.setattr(Warehouse, "_writer", spy)
-    wh.init_tables()
-    assert set(written) == set(wh.tables)
-    for name, plan in written.items():
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, name
+    assert spark_jobs(wh.init_tables) == 0
+    assert spark_jobs(lambda: wh.read("status").count()) > 0  # the counter counts
 
     def fields(st):
         return [(f.name, f.dataType) for f in st.fields]
 
     for name, schema in wh.tables.items():
+        files = sorted(f.name for f in wh.path(name).iterdir())
+        if name in PARTITION_SPEC:
+            assert files == ["_SUCCESS"], name
+        else:
+            assert files == ["_SUCCESS", "part-00000.snappy.parquet"], name
+            assert wh.read_arrow(name).num_rows == 0
         got = wh.read(name)
         assert fields(got.schema) == fields(schema), name
         assert got.count() == 0
@@ -479,3 +480,13 @@ def test_asvs_runs_region_kernel_once_per_project(spark, tmp_path, capsys, monke
         f"{r.project}: {r.region}, {r.length}"
         for r in wh.read("asv_inference").collect()
     )
+
+
+def test_eval_summary_without_samples(spark, tmp_path, capsys):
+    """A header-only summary.tsv has no sample rows to QC: eval says
+    so and exits non-zero instead of raising IndexError."""
+    summ = tmp_path / "summary.tsv"
+    summ.write_text("\tdinput\tfilter\tforwd\trevse\tmerged\tlength\tnonchim\n")
+    wh = str(tmp_path / "wh")
+    assert run(spark, wh, "eval", "PRJ1", "--summary", str(summ)) == 1
+    assert f"Project PRJ1: no samples in {summ}" in capsys.readouterr().out

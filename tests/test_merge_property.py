@@ -1,9 +1,10 @@
 """Property-based check of the MERGE emulation (operators/merge.py).
 
-The engine emulates MERGE INTO three ways (full-row upsert, partial
-non-null-field update, partial upsert with insert defaults) — the write
-path every status transition and enrichment batch goes through. This
-test reimplements the reference semantics as a direct dict model
+The engine emulates MERGE INTO three ways: a full-row upsert and a
+partial non-null-field update on DataFrames (the enrichment and result
+write path), and the status transitions' partial upsert with insert
+defaults, merged on the driver over Arrow rows. This test
+reimplements the reference semantics as a direct dict model
 (`/root/reference/projects.py:87-106` column-wise UPDATE;
 `db.py:445-462` dynamic non-null-field UPDATE; registration INSERT with
 column DEFAULTs) and asserts the DataFrame operators agree on random
@@ -13,10 +14,12 @@ keys, null-heavy updates, and empty sides.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from compendium_spark.operators.merge import partial_update, partial_upsert, upsert
+from compendium_spark.operators.merge import partial_update, upsert
+from compendium_spark.pipeline.status import apply_transitions
 
 SCHEMA = "k string, status string, flag int, note string"
 KEYS = ["K1", "K2", "K3", "K4", "K5"]
@@ -69,42 +72,76 @@ def test_partial_update_matches_dict_model(spark, target, updates):
     assert got == model
 
 
-@settings(max_examples=10, deadline=None)
-@given(target=_rows(KEYS), updates=_rows(KEYS))
-def test_partial_upsert_matches_dict_model(spark, target, updates):
-    got = _collect(
-        partial_upsert(
-            _df(spark, target),
-            _df(spark, updates),
-            key="k",
-            defaults={"flag": 0},
-        )
-    )
-    model = {k: (s, f, n) for k, s, f, n in target}
-    for k, s, f, n in updates:
-        if k in model:
+# The status state machine's transitions (`pipeline.status
+# .apply_transitions`) are merged on the driver: the same dict model,
+# with the registration INSERT's DEFAULT 0 on rerun_as_single_end.
+STATUS_ROWS = st.lists(
+    st.tuples(st.sampled_from(KEYS), val, flag, flag, val, val),
+    min_size=0,
+    max_size=5,
+    unique_by=lambda t: t[0],
+)
+TRANSITIONS = st.lists(
+    st.tuples(st.sampled_from(KEYS), val, flag, val, val),
+    min_size=0,
+    max_size=5,
+    unique_by=lambda t: t[0],
+)
+
+
+def _status_table(rows):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from compendium_spark.schemas import STATUS
+
+    schema = to_arrow_schema(STATUS)
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+
+
+@settings(max_examples=50, deadline=None)
+@given(target=STATUS_ROWS, updates=TRANSITIONS)
+def test_apply_transitions_matches_dict_model(target, updates):
+    got = apply_transitions(_status_table(target), updates)
+    model = {k: (s, f, p, n1, n2) for k, s, f, p, n1, n2 in target}
+    for k, s, f, n1, n2 in updates:
+        if k in model:  # non-null fields only; paired is never touched
             old = model[k]
             model[k] = (
                 s if s is not None else old[0],
                 f if f is not None else old[1],
-                n if n is not None else old[2],
+                old[2],
+                n1 if n1 is not None else old[3],
+                n2 if n2 is not None else old[4],
             )
-        else:  # new key: insert, defaults fill nothing-provided columns
-            model[k] = (s, f, n)
-    assert got == model
+        else:  # new key: insert, the flag DEFAULT 0 unless the row sets it
+            model[k] = (s, f if f is not None else 0, None, n1, n2)
+    assert got.schema == _status_table([]).schema
+    rows = got.to_pylist()
+    assert {r["project"]: tuple(list(r.values())[1:]) for r in rows} == model
+    # stored rows keep their order; new projects follow in update order
+    known = [t[0] for t in target]
+    assert [r["project"] for r in rows] == known + [
+        u[0] for u in updates if u[0] not in known
+    ]
 
 
-def test_partial_upsert_insert_gets_defaults(spark):
-    """A new key whose update frame lacks a column entirely gets the
-    declared default (the reference's DEFAULT 0 on rerun_as_single_end,
-    db.py:137-146)."""
-    target = _df(spark, [("K1", "running", 1, None)])
-    updates = spark.createDataFrame([("K2", "initialized")], "k string, status string")
-    got = _collect(partial_upsert(target, updates, key="k", defaults={"flag": 0}))
-    assert got == {
-        "K1": ("running", 1, None),
-        "K2": ("initialized", 0, None),
-    }
+def test_apply_transitions_insert_gets_defaults():
+    """A new project whose row leaves the flag null gets the declared
+    default (the reference's DEFAULT 0 on rerun_as_single_end,
+    db.py:137-146); a row that sets it keeps its value."""
+    target = _status_table([("K1", "running", 1, 1, None, None)])
+    got = apply_transitions(
+        target,
+        [("K2", "initialized", None, None, None), ("K3", "to_re_run", 1, "n", None)],
+    )
+    assert got.to_pylist() == [
+        dict(project="K1", status="running", rerun_as_single_end=1, paired=1,
+             note1=None, note2=None),
+        dict(project="K2", status="initialized", rerun_as_single_end=0,
+             paired=None, note1=None, note2=None),
+        dict(project="K3", status="to_re_run", rerun_as_single_end=1,
+             paired=None, note1="n", note2=None),
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +151,7 @@ def test_partial_upsert_insert_gets_defaults(spark):
 # statement construction here, and semantic equivalence of the
 # emulation itself (the property tests above — the statement's MATCHED
 # arm is precisely partial_update's COALESCE row, its NOT MATCHED arm
-# precisely partial_upsert's insert).
+# precisely apply_transitions' insert).
 # ---------------------------------------------------------------------------
 
 

@@ -313,3 +313,48 @@ def test_forward_sweep_refusal_changes_nothing(spark, wh, tmp_path):
     assert files() == before_files
     assert _status(wh) == before_status
     assert log == before_log
+
+
+def test_status_transitions_start_no_spark_job(spark, wh, tmp_path, spark_jobs):
+    """A transition, the pairedness check of a single-end re-run and
+    the non-terminal listing all run on the driver: no Spark job."""
+    log = []
+    a = _adapters(spark, tmp_path, log)
+    assert spark_jobs(lambda: set_project_status(wh, "PRJA", "running")) == 0
+    assert spark_jobs(lambda: initialize_pipeline(wh, "PRJB", a)) == 0
+    assert spark_jobs(lambda: rerun_single_end(wh, "PRJB", a, note1="n")) == 0
+    assert spark_jobs(lambda: determine_projects(wh, a)) == 0
+    assert _status(wh) == {
+        "PRJA": ("running", 0, None, None, None),
+        "PRJB": ("running", 1, None, "n", None),
+    }
+
+
+def test_transitions_merge_into_spark_written_status(spark, wh, tmp_path):
+    """Driver-side transitions read and merge a `status` table the
+    Spark path last wrote: `paired` set by partial_update survives,
+    and the pairedness it records gates a single-end re-run."""
+    log = []
+    a = _adapters(spark, tmp_path, log)
+    for p in ("PRJP", "PRJS"):
+        initialize_pipeline(wh, p, a)
+    paired = spark.createDataFrame(
+        [("PRJP", 1), ("PRJS", 0)], "project string, paired int"
+    )
+    wh.partial_update("status", paired, key="project")
+    assert not (wh.path("status") / "part-00000.snappy.parquet").exists()
+
+    run_project(wh, "PRJP", a)
+    discard_project(wh, "PRJS", "single-ended")
+    rerun_single_end(wh, "PRJP", a, note1="merged", auto=False)
+    with pytest.raises(ValueError, match="PRJS as single-end"):
+        rerun_single_end(wh, "PRJS", a)
+    set_project_status(wh, "PRJNEW", "initialized")
+    assert _status(wh) == {
+        "PRJP": ("to_re_run", 1, 1, "merged", None),
+        "PRJS": ("failed", 0, 0, "single-ended", None),
+        "PRJNEW": ("initialized", 0, None, None, None),
+    }
+    assert [r["project"] for r in wh.read_arrow("status").to_pylist()] == [
+        "PRJP", "PRJS", "PRJNEW",
+    ]

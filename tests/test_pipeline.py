@@ -179,7 +179,7 @@ class TestStatusMachine:
         return spark.createDataFrame(rows, STATUS_SCHEMA)
 
     def test_non_terminal(self, spark):
-        got = sorted(r.project for r in non_terminal_projects(self._status(spark)).collect())
+        got = sorted(non_terminal_projects(self._status(spark).toArrow()))
         assert got == ["P1", "P4"]  # management.py:17-20
 
     def test_frequency(self, spark):
