@@ -24,130 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from compendium_spark.plans import all_plans  # noqa: E402
 from compendium_spark.session import get_session  # noqa: E402
 
-# The historical headline list (r1–r6 growth). Kept so the compact
-# line can report a round-over-round comparable "headline_total"; the
-# run itself now covers the WHOLE registry (verdict r6 #7: zero
-# never-benched plans).
-HEADLINE_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q12_priority_shipping",
-    "q4_order_priority",
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q18_large_volume_orders",
-    "a1_group_count_range_pick",
-    "a2_multi_count_distinct",
-    "j2_anti_join",
-    "j7_snowflake_dims",
-    "a10_last_wins_dedup",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "curate_corpus",
-    "dedup_simhash",
-    "sim_cosine_topk",
-    "sim_ivf_topk",
-    "a11_salted_twostage_agg",
-    "mm_feature_pipeline",
-    "w6_lag_lead_delta",
-    "j10_range_join",
-    "f_json_extract",
-    "text_quality_score",
-    "text_token_frequency",
-    "w1_tumbling_window",
-    "w3_sessionization",
-    # round 2 additions
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q21_waiting_orders",
-    "w8_ntile_bands_scaled",
-    # round 2, late additions (quality / compression / PQ surface)
-    "text_repetition_ratio",
-    "curate_pii_redact",
-    "curate_gate_funnel",
-    "emb_quantize_int8",
-    "sim_pq_adc_topk",
-    "sim_ivfpq_topk",
-    "streaming_enrich_join",
-    # round 3 additions
-    "mv_incremental_refresh",
-    "w10_funnel_conversion",
-    "dedup_substring_shingle",
-    "a_approx_error_bound",
-    "text_token_entropy",
-    "text_cooccurrence",
-    "emb_covariance",
-    "sim_sq_topk_recall",
-    "j14_interval_overlap_join",
-    "emb_whiten_check",
-    "cluster_kmeans",
-    "streaming_mv_refresh",
-    "dedup_normalized",
-    "graph_pagerank",
-    # round 4 additions
-    "mm_decode",
-    "dedup_incremental_lsh",
-    "dedup_signature_jaccard",
-    "curate_token_budget",
-    "dedup_semdedup",
-    "text_shingle_containment",
-    "graph_triangle_count",
-    "w11_sequence_pattern",
-    "a16_grouping_sets",
-    "text_tfidf_topk",
-    # round 5
-    "text_tfidf_log",
-    "text_quality_classifier",
-    "sim_range_search",
-    "emb_matryoshka_recall",
-    "ts_interpolate_linear",
-    "w12_time_bounded_funnel",
-    "a18_freq_items_sketch",
-    "o5_zorder_layout",
-    "a19_robust_stats",
-    "mm_phash_dedup",
-    "a20_hll_sketch",
-    "a21_histogram_quantile",
-    "j16_scd2_intervals",
-    "w13_gap_islands",
-    "sim_knn_graph",
-    "emb_kcenter_init",
-    "w14_attribution",
-    "a22_hll_setops",
-    "j17_point_in_time_join",
-    "w15_rolling_zscore",
-    "dedup_bloom_prefilter",
-    "mm_audio_vad",
-    "w16_running_distinct",
-    "graph_common_neighbors",
-    "a23_countmin_sketch",
-    "o6_skew_report",
-    "streaming_scd2",
-    "j18_snapshot_diff",
-    "dq_expectations_report",
-    # round 6
-    "crawl_to_documents",
-    "emb_kcenter_scalable",
-    "j20_asof_nearest",
-    "j21_cdc_apply",
-    "e_pivot_wide",
-    "o7_shard_assign",
-    "o9_weighted_sample",
-    "curate_mixture_temperature",
-    "curate_url_canonical",
-    "text_zipf_profile",
-    "text_hapax_ratio",
-    "emb_centroid_drift",
-    "graph_2hop_features",
-    "dq_snapshot_drift",
-    "sim_mips_topk",
-    "emb_dim_variance_topk",
-    "o10_epoch_shuffle",
-    "w17_retention_cohorts",
-]
-
 
 def _family(name: str) -> str:
     """Bench family = first underscore token, trailing digits stripped
@@ -346,7 +222,6 @@ def compact_line(
     timings: dict[str, float],
     errors: dict[str, str],
     sf,
-    headline: list[str],
     budget: int = 1900,
 ) -> dict:
     """The single stdout JSON line, guaranteed to serialize under
@@ -372,9 +247,6 @@ def compact_line(
         "sf": float(sf) if str(sf).replace(".", "").isdigit() else sf,
         "n_queries": len(timings),
         "n_errors": len(errors),
-        "headline_total": round(
-            sum(timings.get(q, 0.0) for q in headline), 2
-        ),
         "families": fams,
         "worst10": worst,
         "detail": "BENCH_DETAIL.json",
@@ -391,11 +263,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_session("compendium_spark_bench")
     plans = all_plans()
-    # full-registry coverage: headline list first (stable ordering for
-    # eyeballing stderr), then every remaining registered plan
-    suite = HEADLINE_QUERIES + sorted(
-        n for n in plans if n not in HEADLINE_QUERIES
-    )
+    suite = sorted(plans)
 
     # warm the JVM/session on the smallest sf so per-query numbers
     # measure the plan, not session startup; also spawn the Python
@@ -473,7 +341,7 @@ def main() -> None:
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
 
-    print(json.dumps(compact_line(timings, errors, sf, HEADLINE_QUERIES)))
+    print(json.dumps(compact_line(timings, errors, sf)))
 
 
 if __name__ == "__main__":

@@ -42,33 +42,4 @@ from compendium_spark.plans import (  # noqa: F401
     windows,
 )
 
-# The driver's correctness gate samples a 50-plan prefix of the
-# registry per round. The window's COMPOSITION is mechanical and lives
-# in tools/gate_window.json, written by `python tools/gate_ledger.py
-# window` at round close (VERDICT r11 #8 — the per-round window lists
-# that used to accrete here are in git history, rounds 6-11):
-#   tier 1 — every plan the ledger flags stale (new, or code changed
-#            since its last driver-green row): they MUST re-green;
-#   tier 2 — drift canaries: the oldest-green plans fill the remaining
-#            slots, so no green row ages unbounded.
-# `gate_ledger.py window-audit` asserts stale ⊆ window before commit.
-# A missing/invalid window file leaves registration order unchanged
-# (every plan still runs through the local parity suite either way).
-
-
-def _promote_gate_window() -> None:
-    import json
-    from pathlib import Path
-
-    wf = Path(__file__).resolve().parents[2] / "tools" / "gate_window.json"
-    try:
-        names = json.loads(wf.read_text())["window"]
-    except (OSError, ValueError, KeyError):
-        return
-    known = registry.all_plans()
-    registry.promote([n for n in names if n in known])
-
-
-_promote_gate_window()
-
 all_plans = registry.all_plans

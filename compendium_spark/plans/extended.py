@@ -23,8 +23,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -770,9 +768,7 @@ def _dot_unrolled(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
 # by construction: the width grows with the table (capped at core
 # count) and the repartition disappears entirely once the scan's own
 # splits reach it (the 100 TB case — thousands of natural splits).
-EMB_SPREAD_BYTES = int(
-    os.environ.get("SPARK_GRAFT_EMB_SPREAD_BYTES", str(256 * 1024))
-)
+EMB_SPREAD_BYTES = 256 * 1024
 
 
 def _emb_spread_parts(spark: SparkSession, sf_dir: str) -> int | None:

@@ -469,9 +469,8 @@ def ing_summary_disposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered in round 11 (built + oracle-pinned on-deck in round 10
-# while the gate window was full; tests/test_r10_plans.py carries the
-# two-SF parity pins from before first registration)
+# Registered in round 11 (built + oracle-pinned on-deck in round 10;
+# their sf0.1 parity rows are in the tests/test_parity.py matrix)
 # ---------------------------------------------------------------------------
 
 # EFetch EXPERIMENT_PACKAGE fixture (FIXTURES.md §2 / ref db.py:388-438

@@ -1469,9 +1469,7 @@ def sim_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ON-DECK for round 11: cluster-aware split + leakage audit
-# (@plan registration deferred — the round-10 gate window is full;
-# tests exercise fn-vs-oracle parity directly until it registers)
+# cluster-aware split + leakage audit
 # ---------------------------------------------------------------------------
 
 

@@ -3,8 +3,9 @@
 Every query/operator the engine claims is registered here as a
 ``Plan``: a pure function ``(spark, sf_dir) -> DataFrame`` plus
 (where SQL-expressible) the equivalent ANSI SQL a DuckDB oracle can run
-on the same parquet tables. The driver's correctness gate and our own
-``tests/test_parity.py`` both walk this registry.
+on the same parquet tables. ``all_plans()`` returns them in
+registration order; ``tests/test_parity.py`` hash-checks every plan
+against its oracle.
 
 Parity rules (so value-hashes match across engines):
   * alias every computed column identically in Spark and SQL;
@@ -50,20 +51,3 @@ def plan(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 def all_plans() -> dict[str, Plan]:
     return dict(_REGISTRY)
 
-
-def promote(names: list[str]) -> None:
-    """Reorder the registry so ``names`` come first (in the given
-    order), everything else after in registration order.
-
-    The driver's correctness gate samples a prefix of the registry, so
-    plans that still need a driver-green row are promoted into the
-    window; plans already green in a prior round's CORRECTNESS file sit
-    behind them. Unknown names are an error (catches typos when a plan
-    is renamed)."""
-    unknown = [n for n in names if n not in _REGISTRY]
-    if unknown:
-        raise ValueError(f"promote: unknown plan names {unknown!r}")
-    rest = [n for n in _REGISTRY if n not in set(names)]
-    reordered = {n: _REGISTRY[n] for n in [*names, *rest]}
-    _REGISTRY.clear()
-    _REGISTRY.update(reordered)

@@ -28,17 +28,23 @@ def _dec(c: str):
     return F.col(c).cast(DEC)
 
 
+# DuckDB 1.0's CAST(DECIMAL AS DOUBLE) can miss the correctly rounded
+# double by one ulp once the unscaled sum passes 2^53; Spark rounds
+# correctly. The two high-scale sums (scale 8 and 12) therefore go
+# through VARCHAR, whose parse rounds correctly.
 Q1_SQL = """
 SELECT
   l_returnflag,
   l_linestatus,
   CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-           * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+           * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS VARCHAR) AS DOUBLE)
+    AS sum_disc_price,
+  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
            * (1 - CAST(l_discount AS DECIMAL(18,4)))
-           * (1 + CAST(l_tax AS DECIMAL(18,4)))) AS DOUBLE) AS sum_charge,
+           * (1 + CAST(l_tax AS DECIMAL(18,4)))) AS VARCHAR) AS DOUBLE)
+    AS sum_charge,
   CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price,
   CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_disc,

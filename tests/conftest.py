@@ -6,6 +6,7 @@ from compendium_spark.session import get_session
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+SF_FULL = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="session")

@@ -167,7 +167,7 @@ class TestCompactLine:
 
     def test_fits_budget_at_registry_scale(self):
         t = self._timings(250)
-        out = bench.compact_line(t, {}, "0.1", list(t)[:111])
+        out = bench.compact_line(t, {}, "0.1")
         assert len(json.dumps(out)) <= 1900
         assert out["n_queries"] == 250
         assert out["value"] > 0
@@ -180,13 +180,13 @@ class TestCompactLine:
             f"fam{letters[i // 20]}{letters[i % 20]}_plan": 0.5
             for i in range(400)
         }
-        out = bench.compact_line(t, {}, "0.1", [], budget=250)
+        out = bench.compact_line(t, {}, "0.1", budget=250)
         assert len(json.dumps(out)) <= 250
         assert "worst10" not in out and "families" not in out
 
     def test_worst10_are_the_slowest(self):
         t = {"fast_a": 0.1, "slow_b": 9.0, "mid_c": 1.0}
-        out = bench.compact_line(t, {}, "0.01", [])
+        out = bench.compact_line(t, {}, "0.01")
         assert list(out["worst10"])[0] == "slow_b"
 
     def test_family_rollup(self):

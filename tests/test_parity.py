@@ -1,10 +1,16 @@
-"""Local mirror of the driver's correctness gate.
+"""Value parity of the registered plans against their DuckDB oracles.
 
-For every registered plan with an oracle: run the Spark query and the
-DuckDB SQL on the same sf0.01 parquet, normalize (sort columns by
-name, sort rows), and require value equality. Strict by design — the
-plans are written for cross-engine bit-parity (decimal aggregation,
-md5 hashing, fixed rounding), so any diff is a real defect.
+``test_oracle_parity`` runs every plan that has an oracle at sf0.01:
+run the Spark query and the DuckDB SQL on the same parquet, normalize
+(sort columns by name, sort rows), and require equality at the
+strength of a value hash. Strict by design — the plans are written for
+cross-engine bit-parity (decimal aggregation, md5 hashing, fixed
+rounding), so any diff is a real defect.
+
+The parity matrix at the end adds the checks one sf0.01 pass cannot
+see, one table and one parametrized test per check: oracle parity one
+scale factor up, shuffle-partition invariance, repeat-run stability
+and rerun idempotency.
 """
 
 from __future__ import annotations
@@ -16,7 +22,7 @@ import pytest
 from compendium_spark.plans import all_plans
 from compendium_spark.tables import TABLE_NAMES
 
-from .conftest import SF_ORACLE
+from .conftest import SF_FULL, SF_ORACLE, SF_SMOKE
 
 PLANS = all_plans()
 WITH_ORACLE = sorted(n for n, p in PLANS.items() if p.oracle is not None)
@@ -88,13 +94,26 @@ def _assert_hash_equal(got: pd.DataFrame, want: pd.DataFrame, name: str) -> None
                 )
 
 
+def _run(spark, name: str, sf_dir: str) -> pd.DataFrame:
+    return _normalize(PLANS[name].fn(spark, sf_dir).toPandas())
+
+
+def _assert_same_run(a: pd.DataFrame, b: pd.DataFrame, label: str) -> None:
+    """Two runs of one plan: exact dtypes, bitwise floats."""
+    assert list(a.dtypes) == list(b.dtypes), f"{label}: dtypes differ"
+    _assert_hash_equal(a, b, label)
+
+
+def _assert_oracle_parity(spark, name: str, sf_dir: str) -> None:
+    got = _run(spark, name, sf_dir)
+    want = _normalize(_duck_conn(sf_dir).execute(PLANS[name].oracle).df())
+    assert len(got) > 0, f"{name}: empty result is a vacuous parity check"
+    _assert_hash_equal(got, want, name)
+
+
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_parity(spark, name):
-    p = PLANS[name]
-    got = _normalize(p.fn(spark, SF_ORACLE).toPandas())
-    con = _duck_conn(SF_ORACLE)
-    want = _normalize(con.execute(p.oracle).df())
-    _assert_hash_equal(got, want, name)
+    _assert_oracle_parity(spark, name, SF_ORACLE)
 
 
 def test_gate_rejects_signed_zero():
@@ -112,3 +131,201 @@ def test_rows_only_plans_run(spark, name):
     df = p.fn(spark, SF_ORACLE)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_q1_oracle_rounds_large_decimal_sums(spark, tmp_path):
+    """q1's DECIMAL sums past 2^53 unscaled must reach DOUBLE correctly
+    rounded on both engines. DuckDB 1.0's direct DECIMAL→DOUBLE cast
+    misses by one ulp in both sum_disc_price (scale 8) and sum_charge
+    (scale 12) on this fixture (seed 3 is one where it does); Spark
+    rounds correctly. Prices carry cents, as in TPC-H: a charge with
+    more than 6 decimals would exceed Spark's DECIMAL(38, 6) product."""
+    import datetime
+    import random
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(3)
+    rows = [
+        (
+            Decimal(rng.randint(80_000_000, 89_999_999)) / 100,
+            Decimal(rng.randint(0, 10)) / 100,
+            Decimal(rng.randint(0, 8)) / 100,
+        )
+        for _ in range(2000)
+    ]
+    n = len(rows)
+    pq.write_table(
+        pa.table({
+            "l_quantity": [1.0] * n,
+            "l_extendedprice": [float(p) for p, _, _ in rows],
+            "l_discount": [float(d) for _, d, _ in rows],
+            "l_tax": [float(t) for _, _, t in rows],
+            "l_returnflag": ["N"] * n,
+            "l_linestatus": ["F"] * n,
+            "l_shipdate": pa.array(
+                [datetime.datetime(1995, 1, 1)] * n, pa.timestamp("us")
+            ),
+        }),
+        tmp_path / "lineitem.parquet",
+    )
+    got = _run(spark, "q1_pricing_summary", str(tmp_path))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'"
+    )
+    want = _normalize(con.execute(PLANS["q1_pricing_summary"].oracle).df())
+    exact = {
+        "sum_disc_price": float(sum(p * (1 - d) for p, d, _ in rows)),
+        "sum_charge": float(sum(p * (1 - d) * (1 + t) for p, d, t in rows)),
+    }
+    for col, value in exact.items():
+        assert got[col].iloc[0] == value, (col, got[col].iloc[0], value)
+    _assert_hash_equal(got, want, "q1_pricing_summary")
+
+
+# ---------------------------------------------------------------------------
+# parity matrix: one table per check, one parametrized test per table
+# ---------------------------------------------------------------------------
+
+# oracle parity at sf0.1, one scale factor past test_oracle_parity:
+# sf0.01-only checks can hide scale behavior (an unroll one round
+# short of the fixpoint, a size gate that flips). The fixture-staged
+# ing_* and sink_* plans ignore sf_dir; their rows pin that they do.
+SF_FULL_PARITY = [
+    # nested probes, decompositions, trainers, streaming outer join
+    "curate_dsir_weights",
+    "emb_dedup_threshold_curve",
+    "sim_filtered_topk",
+    "sim_ivf_tuning_curve",
+    "streaming_interval_outer_join",
+    "text_heaps_curve",
+    "train_pq_codebooks",
+    "train_quality_logreg",
+    "ts_seasonal_decompose",
+    # winnowing, DSIR resampling, remainder anomalies, IVF training,
+    # k-core fixpoint, MinHash source overlap
+    "curate_dsir_resample",
+    "curate_mixture_epochs",
+    "dedup_winnowing",
+    "graph_kcore",
+    "text_gopher_rules",
+    "text_source_overlap_matrix",
+    "train_ivf_centroids",
+    "ts_anomaly_remainder",
+    # fixture ingest and the ANN frontier
+    "curate_split_leakage",
+    "ing_asv_counts_melt",
+    "ing_fasta_pairs",
+    "ing_geo_summary",
+    "ing_sources_decisions",
+    "ing_summary_disposition",
+    "ing_taxonomy",
+    "ing_xml_runs",
+    "ing_xml_samples",
+    "ing_xml_tags",
+    "sim_frontier_report",
+    "sim_mmr_topk",
+    # sink round-trips and the lakehouse write path
+    "sink_accessions_roundtrip",
+    "sink_archive_roundtrip",
+    "sink_cdf_roundtrip",
+    "sink_compaction_roundtrip",
+    "sink_delete_roundtrip",
+    "sink_exactly_once_roundtrip",
+    "sink_sources_roundtrip",
+    "sink_stats_pruned_scan",
+    "sink_timetravel_roundtrip",
+]
+
+# bitwise-identical at 3 and 32 shuffle partitions (sf0.001)
+PARTITION_INVARIANT = [
+    "curate_dsir_resample",
+    "curate_dsir_weights",
+    "curate_mixture_epochs",
+    "dedup_winnowing",
+    "emb_dedup_threshold_curve",
+    "graph_kcore",
+    "sim_filtered_topk",
+    "sim_ivf_tuning_curve",
+    "streaming_interval_outer_join",
+    "text_gopher_rules",
+    "text_heaps_curve",
+    "text_source_overlap_matrix",
+    "train_ivf_centroids",
+    "train_pq_codebooks",
+    "train_quality_logreg",
+    "ts_anomaly_remainder",
+    "ts_seasonal_decompose",
+]
+
+# bitwise-identical across two runs at sf0.1: plans whose float sums
+# feed a quantizer, where a boundary flip is run-to-run
+# nondeterminism one parity pass cannot see
+REPEAT_STABLE = [
+    "curate_dsir_weights",
+    "sim_frontier_report",
+    "text_source_overlap_matrix",
+    "train_ivf_centroids",
+    "train_quality_logreg",
+    "ts_anomaly_remainder",
+    "ts_seasonal_decompose",
+]
+
+# identical across two back-to-back runs at sf0.01: these plans stage
+# real files (fixtures, warehouses, archives) and wipe their scratch
+# dir per run, so a rerun must not double-append
+RERUN_IDEMPOTENT = [
+    "ing_summary_disposition",
+    "ing_xml_tags",
+    "sink_accessions_roundtrip",
+    "sink_archive_roundtrip",
+    "sink_cdf_roundtrip",
+    "sink_delete_roundtrip",
+    "sink_sources_roundtrip",
+    "sink_timetravel_roundtrip",
+]
+
+
+@pytest.mark.parametrize("name", SF_FULL_PARITY)
+def test_sf01_parity(spark, name):
+    _assert_oracle_parity(spark, name, SF_FULL)
+
+
+@pytest.mark.parametrize("name", PARTITION_INVARIANT)
+def test_partition_invariance(spark, name, monkeypatch):
+    """The streaming plans pin their shuffle partitions internally
+    (_run_to_memory → STREAM_STATE_PARTITIONS), so for them the sweep
+    varies THAT constant — otherwise both runs would execute at the
+    same state layout and the check would be vacuous for exactly the
+    plans whose state distribution matters."""
+    import compendium_spark.streaming.windows as sw
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(n_part: int) -> pd.DataFrame:
+        if name.startswith("streaming_"):
+            monkeypatch.setattr(sw, "STREAM_STATE_PARTITIONS", n_part)
+        else:
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+        return _run(spark, name, SF_SMOKE)
+
+    try:
+        lo, hi = run(3), run(32)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _assert_hash_equal(lo, hi, f"{name}@partitions")
+
+
+@pytest.mark.parametrize("name", REPEAT_STABLE)
+def test_repeat_run_stable_sf01(spark, name):
+    a = _run(spark, name, SF_FULL)
+    _assert_same_run(a, _run(spark, name, SF_FULL), f"{name}@repeat")
+
+
+@pytest.mark.parametrize("name", RERUN_IDEMPOTENT)
+def test_rerun_idempotent(spark, name):
+    a = _run(spark, name, SF_ORACLE)
+    _assert_same_run(a, _run(spark, name, SF_ORACLE), f"{name}@rerun")

@@ -1,8 +1,9 @@
-"""Round-10 plans: fixture-backed ingest gating (VERDICT r9 #1), the
-cross-family ANN frontier (#7), and the MinHash source-overlap rework
-(weak #1). Same bar as test_r9*_plans.py: sf0.1 parity one SF past the
-gate, repeat-run stability, and the semantic pins a value-hash can't
-express."""
+"""Round-10 plans: fixture-backed ingest, the cross-family ANN
+frontier, the MinHash source-overlap rework, and the round-10 on-deck
+cohort (split leakage, MMR, more ingest). Their oracle parity at sf0.1,
+repeat-run stability and rerun idempotency are rows of the parity
+matrix in tests/test_parity.py; this file pins the semantics a
+value-hash can't express."""
 
 from __future__ import annotations
 
@@ -10,47 +11,8 @@ import collections
 
 import pytest
 
-from compendium_spark.plans.registry import all_plans
-
-from .conftest import SF_ORACLE
-from .test_parity import _assert_hash_equal, _duck_conn, _normalize
-
-R10_PLANS = [
-    "ing_xml_samples",
-    "ing_xml_tags",
-    "ing_fasta_pairs",
-    "ing_summary_disposition",
-    "sim_frontier_report",
-    "text_source_overlap_matrix",
-]
-
-SF_FULL = "/root/testdata/sf0.1"
-
-
-@pytest.mark.parametrize("name", sorted(R10_PLANS))
-def test_r10_parity_sf01(spark, name):
-    p = all_plans()[name]
-    got = _normalize(p.fn(spark, SF_FULL).toPandas())
-    want = _normalize(_duck_conn(SF_FULL).execute(p.oracle).df())
-    assert len(got) > 0, f"{name}: empty result is a vacuous parity check"
-    _assert_hash_equal(got, want, name)
-
-
-@pytest.mark.parametrize(
-    "name", ["sim_frontier_report", "text_source_overlap_matrix"]
-)
-def test_r10_repeatruns_stable_sf01(spark, name):
-    """The r8 seasonal-mean lesson: run the data-dependent plans twice
-    at sf0.1 and require identical frames — catches partition-order
-    float nondeterminism no single parity pass can see. (The ing_*
-    plans are fixture-constant; their repeat-run stability is implied
-    by the sf0.1 parity above.)"""
-    import pandas as pd
-
-    fn = all_plans()[name].fn
-    a = _normalize(fn(spark, SF_FULL).toPandas())
-    b = _normalize(fn(spark, SF_FULL).toPandas())
-    pd.testing.assert_frame_equal(a, b, check_exact=True)
+from .conftest import SF_FULL, SF_ORACLE
+from .test_parity import _duck_conn
 
 
 # ---------------------------------------------------------------------------
@@ -123,18 +85,6 @@ def test_ing_summary_disposition_semantics(spark):
     # PRJ_RERUN has 5 samples incl. the zero-count control; the
     # control's NULL ratios flag False, so proportions divide by 5
     assert by["PRJ_RERUN"].sample_count == 5
-
-
-def test_ing_plans_rerun_identical(spark):
-    """The staged-fixture path is idempotent: calling a plan twice
-    (restaging the file) yields the identical frame."""
-    import pandas as pd
-
-    for name in ("ing_xml_tags", "ing_summary_disposition"):
-        fn = all_plans()[name].fn
-        a = _normalize(fn(spark, SF_ORACLE).toPandas())
-        b = _normalize(fn(spark, SF_ORACLE).toPandas())
-        pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
 # ---------------------------------------------------------------------------
@@ -222,46 +172,8 @@ def test_overlap_minhash_vs_exact(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# round-10 on-deck plans, registered at round-11 start; the two-SF
-# parity pins earned on-deck stay here (the driver gate only runs
-# sf0.01, this also covers sf0.1)
+# round-10 on-deck cohort semantics
 # ---------------------------------------------------------------------------
-
-R11_REGISTERED = [
-    "ing_xml_runs",
-    "ing_asv_counts_melt",
-    "ing_taxonomy",
-    "ing_sources_decisions",
-    "ing_geo_summary",
-    "curate_split_leakage",
-    "sim_mmr_topk",
-]
-
-
-def _ondeck_r11():
-    plans = all_plans()
-    return [(n, plans[n].fn, plans[n].oracle) for n in R11_REGISTERED]
-
-
-def test_r11_cohort_registered():
-    """The round-10 on-deck cohort is registered (round-11 start),
-    each with an oracle."""
-    registered = all_plans()
-    for name in R11_REGISTERED:
-        assert name in registered, name
-        assert registered[name].oracle, name
-
-
-@pytest.mark.parametrize("sf_dir", [SF_ORACLE, SF_FULL])
-def test_ondeck_r11_parity(spark, sf_dir):
-    """Full driver-gate-strength parity for the r11 cohort, at the
-    gate SF and one past it."""
-    con = _duck_conn(sf_dir)
-    for name, fn, sql in _ondeck_r11():
-        got = _normalize(fn(spark, sf_dir).toPandas())
-        want = _normalize(con.execute(sql).df())
-        assert len(got) > 0, f"{name}: vacuous"
-        _assert_hash_equal(got, want, name)
 
 
 def test_split_leakage_semantics(spark):

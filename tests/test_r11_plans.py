@@ -1,53 +1,18 @@
-"""Round-11 plans: the sink round-trips (VERDICT r10 #4 — K1 insert,
-K3 accession list, K4 processed sources, K5 tar archive, the last
-operator class with no oracle exposure). Same bar as test_r10_plans:
-driver-gate-strength parity at the gate SF and one past it, repeat-run
-idempotency (the sinks stage real files — a second run must not
-double-append), and the semantic pins a value-hash can't express."""
+"""Round-11 plans: the sink round-trips (K1 insert, K3 accession
+list, K4 processed sources, K5 tar archive) and the lakehouse sink
+plans registered at round-12 start. Their oracle parity at sf0.1 and
+the sinks' rerun idempotency are rows of the parity matrix in
+tests/test_parity.py; this file pins the artifact and file-level
+semantics a value-hash can't express."""
 
 from __future__ import annotations
 
 import tarfile
 
-import pytest
-
 from compendium_spark.plans.registry import all_plans
 
 from .conftest import SF_ORACLE
-from .test_parity import _assert_hash_equal, _duck_conn, _normalize
-
-SF_FULL = "/root/testdata/sf0.1"
-
-SINK_PLANS = [
-    "sink_accessions_roundtrip",
-    "sink_sources_roundtrip",
-    "sink_archive_roundtrip",
-    "sink_timetravel_roundtrip",
-]
-
-
-@pytest.mark.parametrize("sf_dir", [SF_ORACLE, SF_FULL])
-@pytest.mark.parametrize("name", SINK_PLANS)
-def test_sink_parity(spark, name, sf_dir):
-    p = all_plans()[name]
-    got = _normalize(p.fn(spark, sf_dir).toPandas())
-    want = _normalize(_duck_conn(sf_dir).execute(p.oracle).df())
-    assert len(got) > 0, f"{name}: vacuous"
-    _assert_hash_equal(got, want, name)
-
-
-@pytest.mark.parametrize("name", SINK_PLANS)
-def test_sink_idempotent_rerun(spark, name):
-    """The sinks write real artifacts to a scratch dir; the plan wipes
-    it per run, so back-to-back runs are byte-stable. The dangerous
-    failure this pins: an append sink rerun against the previous run's
-    warehouse would double its rows."""
-    import pandas as pd
-
-    fn = all_plans()[name].fn
-    a = _normalize(fn(spark, SF_ORACLE).toPandas())
-    b = _normalize(fn(spark, SF_ORACLE).toPandas())
-    pd.testing.assert_frame_equal(a, b, check_exact=True)
+from .test_parity import _normalize
 
 
 def test_accessions_eligibility_semantics(spark):
@@ -126,35 +91,6 @@ def test_sources_sink_matches_classifier_plan(spark):
 # ---------------------------------------------------------------------------
 # r11 on-deck lakehouse plans, registered at r12 start (VERDICT r11 #1)
 # ---------------------------------------------------------------------------
-
-_R12_LAKEHOUSE = [
-    "sink_stats_pruned_scan",
-    "sink_compaction_roundtrip",
-    "sink_exactly_once_roundtrip",
-]
-
-
-def test_r12_lakehouse_plans_registered():
-    """The r11 on-deck plans are now first-class registry entries with
-    oracles (the driver gate hashes them like every other plan)."""
-    plans = all_plans()
-    for name in _R12_LAKEHOUSE:
-        assert name in plans, name
-        assert plans[name].oracle, name
-
-
-@pytest.mark.parametrize("sf_dir", [SF_ORACLE, SF_FULL])
-def test_r12_lakehouse_parity(spark, sf_dir):
-    """Full driver-gate-strength parity for the lakehouse sink plans,
-    at the gate SF and one past it (the sinks ignore sf_dir by design —
-    the unit under test is the lakehouse machinery)."""
-    plans = all_plans()
-    for name in _R12_LAKEHOUSE:
-        p = plans[name]
-        got = _normalize(p.fn(spark, sf_dir).toPandas())
-        want = _normalize(_duck_conn(sf_dir).execute(p.oracle).df())
-        assert len(got) > 0, f"{name}: vacuous"
-        _assert_hash_equal(got, want, name)
 
 
 def _reopen_vwh(spark, plan_workdir, **kw):

@@ -1,42 +1,13 @@
 """Round-12 plans: COW DELETE + row-level change data feed — the two
-Delta write-path behaviors the versioned warehouse still lacked. Same
-bar as test_r10/r11_plans: driver-gate-strength parity at the gate SF
-and one past it, repeat-run idempotency, and the file-level pins the
-value hash can't express (pruned rewrite set, carry-by-reference,
-diff-only CDF reads)."""
+Delta write-path behaviors the versioned warehouse still lacked. Their
+oracle parity at sf0.1 and rerun idempotency are rows of the parity
+matrix in tests/test_parity.py; this file pins what the value hash
+can't express (pruned rewrite set, carry-by-reference, diff-only CDF
+reads)."""
 
 from __future__ import annotations
 
-import pytest
-
-from compendium_spark.plans.registry import all_plans
-
 from .conftest import SF_ORACLE
-from .test_parity import _assert_hash_equal, _duck_conn, _normalize
-
-SF_FULL = "/root/testdata/sf0.1"
-
-R12_PLANS = ["sink_delete_roundtrip", "sink_cdf_roundtrip"]
-
-
-@pytest.mark.parametrize("sf_dir", [SF_ORACLE, SF_FULL])
-@pytest.mark.parametrize("name", R12_PLANS)
-def test_r12_parity(spark, name, sf_dir):
-    p = all_plans()[name]
-    got = _normalize(p.fn(spark, sf_dir).toPandas())
-    want = _normalize(_duck_conn(sf_dir).execute(p.oracle).df())
-    assert len(got) > 0, f"{name}: vacuous"
-    _assert_hash_equal(got, want, name)
-
-
-@pytest.mark.parametrize("name", R12_PLANS)
-def test_r12_idempotent_rerun(spark, name):
-    import pandas as pd
-
-    fn = all_plans()[name].fn
-    a = _normalize(fn(spark, SF_ORACLE).toPandas())
-    b = _normalize(fn(spark, SF_ORACLE).toPandas())
-    pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
 def _reopen_vwh(spark, plan_workdir):

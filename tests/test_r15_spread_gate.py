@@ -11,6 +11,8 @@ unconditional repartition was a full corpus shuffle."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from compendium_spark import tables
@@ -55,5 +57,5 @@ def test_gated_plan_is_byte_identical_at_bench_sf(spark):
     df = all_plans()["dedup_minhash_lsh"].fn(spark, "/root/testdata/sf0.01")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     par = spark.sparkContext.defaultParallelism
-    assert f"RepartitionByExpression [doc_id#" in plan or "doc_id" in plan
-    assert f", {par}" in plan  # the spread width survives in the plan
+    width = rf"RepartitionByExpression \[doc_id#\d+L?\], {par}\b"
+    assert re.search(width, plan), plan

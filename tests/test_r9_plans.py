@@ -1,146 +1,17 @@
-"""Hash-strength parity + semantic pins for the 9 round-9 plans.
+"""Semantic pins for the round-9 plans.
 
-These shipped in round 8 as the unregistered on-deck module (the
-50-slot gate window was full) and were folded into their home modules
-and registered at round-9 start. tests/test_parity.py already runs
-the registered-plan hash parity at sf0.001/sf0.01; this suite goes one
-SF further (sf0.1 — the round-7 embedding-cosine lesson: sf0.01-only
-checks can hide scale behavior), sweeps shuffle-partition counts, and
-pins the semantics a value-hash can't express (nested-probe
+Their sf0.1 oracle parity, shuffle-partition invariance and repeat-run
+stability are rows of the parity matrix in tests/test_parity.py; this
+file pins the semantics a value-hash can't express (nested-probe
 monotonicity, decomposition identity, trained-model quality).
 """
 
 from __future__ import annotations
 
-import pytest
-
 from compendium_spark.plans import extended, ivf, scoring, streaming_plans, text, timeseries
-from compendium_spark.plans.registry import all_plans
 
-from .conftest import SF_ORACLE, SF_SMOKE
-from .test_parity import _assert_hash_equal, _duck_conn, _normalize
-
-R9_PLANS = [
-    "curate_dsir_weights",
-    "sim_ivf_tuning_curve",
-    "ts_seasonal_decompose",
-    "emb_dedup_threshold_curve",
-    "text_heaps_curve",
-    "sim_filtered_topk",
-    "streaming_interval_outer_join",
-    "train_quality_logreg",
-    "train_pq_codebooks",
-]
-
-SF_FULL = "/root/testdata/sf0.1"
-
-
-def test_all_r9_plans_registered_with_oracles():
-    live = all_plans()
-    for name in R9_PLANS:
-        assert name in live, f"{name} not registered"
-        assert live[name].oracle, f"{name} registered without an oracle"
-
-
-@pytest.mark.parametrize("sf_dir", [SF_FULL])
-@pytest.mark.parametrize("name", sorted(R9_PLANS))
-def test_r9_parity_sf01(spark, name, sf_dir):
-    """sf0.1 parity — one SF beyond the driver gate (sf0.001/sf0.01
-    are covered for every registered plan by tests/test_parity.py)."""
-    p = all_plans()[name]
-    got = _normalize(p.fn(spark, sf_dir).toPandas())
-    want = _normalize(_duck_conn(sf_dir).execute(p.oracle).df())
-    assert len(got) > 0, f"{name}: empty result is a vacuous parity check"
-    _assert_hash_equal(got, want, name)
-
-
-@pytest.mark.parametrize("name", sorted(R9_PLANS))
-def test_r9_partition_invariance(spark, name, monkeypatch):
-    """Distributed-correctness core property: the result must be
-    bitwise identical at any shuffle-partition count. The streaming
-    plan pins shuffle partitions internally (_run_to_memory →
-    STREAM_STATE_PARTITIONS), so for it the sweep varies THAT constant
-    — otherwise both runs would silently execute at the same
-    8-partition state layout and the test would be vacuous for exactly
-    the plan whose state distribution matters."""
-    import compendium_spark.streaming.windows as sw
-
-    fn = all_plans()[name].fn
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-
-    def run(n_part: int):
-        if name.startswith("streaming_"):
-            monkeypatch.setattr(sw, "STREAM_STATE_PARTITIONS", n_part)
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-        return _normalize(fn(spark, SF_SMOKE).toPandas())
-
-    try:
-        lo = run(3)
-        hi = run(32)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _assert_hash_equal(lo, hi, f"{name}@partitions")
-
-
-@pytest.mark.parametrize(
-    "name",
-    sorted(
-        n
-        for n in R9_PLANS
-        # the trainers run their iteration floats-through-integers
-        # inside the function and return a driver-built table at grid
-        # precision — a second full GD/Lloyd run per repeat is covered
-        # by the partition sweep above; the seasonal plan is the one
-        # whose r8 bug WAS a repeat-run flip, so it repeats here too
-        if n in ("ts_seasonal_decompose", "curate_dsir_weights",
-                 "train_quality_logreg")
-    ),
-)
-def test_r9_repeatruns_stable_sf01(spark, name):
-    """ADVICE r8 #2: the float-sum→FLOOR-quantizer boundary-flip class
-    is RUN-TO-RUN nondeterminism, which a single parity pass can't
-    see. Re-run the reworked integer-exact plans at sf0.1 and require
-    bitwise-identical results (the verification that caught the
-    ts_seasonal_decompose bug)."""
-    fn = all_plans()[name].fn
-    a = _normalize(fn(spark, SF_FULL).toPandas())
-    b = _normalize(fn(spark, SF_FULL).toPandas())
-    _assert_hash_equal(a, b, f"{name}@repeat")
-
-
-# mirror of tests/test_plan_shapes.py: keyless joins only where they
-# are the documented design (exact-baseline sweeps against ≤10
-# broadcast queries, 1-row scalar totals, literal sweep frames)
-R9_KEYLESS_OK = {
-    "curate_dsir_weights",  # 1-row (tot_t, tot_r) scalar broadcast
-    "sim_ivf_tuning_curve",  # exact-baseline sweep + ≤8-row rank/sweep frames + 1-row totals
-    "emb_dedup_threshold_curve",  # 1-row corpus-total broadcast into the shares
-}
-# plans whose RETURNED frame does not embody the computation, so its
-# executed plan proves nothing about join strategy: the trainers run
-# their joins eagerly inside the function and return a driver-built
-# table; the streaming plan returns a memory-sink read. Their join
-# hygiene is covered by the broadcast-policy lint (every hint site
-# allowlisted with a bound and a site count).
-R9_DRIVER_BUILT = {
-    "train_quality_logreg",
-    "train_pq_codebooks",
-    "streaming_interval_outer_join",
-}
-
-
-@pytest.mark.parametrize("name", sorted(set(R9_PLANS) - R9_DRIVER_BUILT))
-def test_r9_no_accidental_allpairs_join(spark, name):
-    fn = all_plans()[name].fn
-    df = fn(spark, SF_SMOKE)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
-    if name in R9_KEYLESS_OK:
-        return  # documented
-    assert "CartesianProduct" not in plan, name
-    assert "BroadcastNestedLoopJoin" not in plan, name
+from .conftest import SF_ORACLE
+from .test_parity import _duck_conn
 
 
 def test_dsir_target_slice_scores_higher(spark):

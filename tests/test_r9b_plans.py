@@ -1,99 +1,13 @@
 """Round-9 second batch: winnowing dedup, DSIR resampling, remainder
-anomalies, IVF centroid training. Same bar as tests/test_r9_plans.py:
-sf0.1 parity one SF past the gate, partition-count invariance, shape
-guards, and the semantic pins a value-hash can't express."""
+anomalies, IVF centroid training, k-core, MinHash source overlap.
+Their sf0.1 oracle parity, shuffle-partition invariance and repeat-run
+stability are rows of the parity matrix in tests/test_parity.py; this
+file pins the semantics a value-hash can't express."""
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-from compendium_spark.plans.registry import all_plans
-
-from .conftest import SF_ORACLE, SF_SMOKE
-from .test_parity import _assert_hash_equal, _duck_conn, _normalize
-
-R9B_PLANS = [
-    "dedup_winnowing",
-    "curate_dsir_resample",
-    "ts_anomaly_remainder",
-    "train_ivf_centroids",
-    "text_gopher_rules",
-    "curate_mixture_epochs",
-    "graph_kcore",
-    "text_source_overlap_matrix",
-]
-
-SF_FULL = "/root/testdata/sf0.1"
-
-
-@pytest.mark.parametrize("sf_dir", [SF_FULL])
-@pytest.mark.parametrize("name", sorted(R9B_PLANS))
-def test_r9b_parity_sf01(spark, name, sf_dir):
-    p = all_plans()[name]
-    got = _normalize(p.fn(spark, sf_dir).toPandas())
-    want = _normalize(_duck_conn(sf_dir).execute(p.oracle).df())
-    assert len(got) > 0, f"{name}: empty result is a vacuous parity check"
-    _assert_hash_equal(got, want, name)
-
-
-@pytest.mark.parametrize("name", sorted(R9B_PLANS))
-def test_r9b_partition_invariance(spark, name):
-    fn = all_plans()[name].fn
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        lo = _normalize(fn(spark, SF_SMOKE).toPandas())
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        hi = _normalize(fn(spark, SF_SMOKE).toPandas())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _assert_hash_equal(lo, hi, f"{name}@partitions")
-
-
-# the IVF trainer runs its joins eagerly and returns a driver-built
-# table (the train_pq_codebooks exemption class); all others must show
-# a keyed-join-only executed plan
-R9B_DRIVER_BUILT = {
-    "train_ivf_centroids",
-    # kcore's returned frame ends at the coreness join chain; the peel
-    # rounds materialize eagerly inside the loop (checkpointed), so
-    # the final plan proves nothing about the peel joins — covered by
-    # the parity + convergence pins instead
-    "graph_kcore",
-}
-# documented keyless joins: the DSIR 1-row (tot_t, tot_r) scalar
-# broadcast rides into the resampler through _dsir_doc_scores (the
-# same exemption curate_dsir_weights carries in test_r9_plans.py)
-R9B_KEYLESS_OK = {
-    "curate_dsir_resample",
-    # source×source grid: an inequality join of two SOURCE-COUNT-row
-    # frames (≤20 rows/side — bounded by semantics, not SF)
-    "text_source_overlap_matrix",
-}
-
-
-@pytest.mark.parametrize("name", sorted(set(R9B_PLANS) - R9B_DRIVER_BUILT))
-def test_r9b_no_accidental_allpairs_join(spark, name):
-    fn = all_plans()[name].fn
-    df = fn(spark, SF_SMOKE)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
-    if name in R9B_KEYLESS_OK:
-        return  # documented
-    assert "CartesianProduct" not in plan, name
-    assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_r9b_repeatruns_stable_sf01(spark):
-    """The float-sum boundary-flip guard for the two new plans whose
-    aggregation feeds a quantizer (ADVICE r8 #2 discipline)."""
-    for name in ("ts_anomaly_remainder", "train_ivf_centroids"):
-        fn = all_plans()[name].fn
-        a = _normalize(fn(spark, SF_FULL).toPandas())
-        b = _normalize(fn(spark, SF_FULL).toPandas())
-        _assert_hash_equal(a, b, f"{name}@repeat")
+from .conftest import SF_ORACLE
+from .test_parity import _duck_conn
 
 
 def test_winnowing_positional_guarantee(spark):

@@ -5,16 +5,15 @@ the driver's environment may differ, and any plan whose output depends
 on partition count (a float sum whose accumulation order shifts, a
 nondeterministic tie) would pass locally and fail in the gate. This
 tool re-runs the oracle parity compare — same bitwise float
-discipline — under a DIFFERENT shuffle-partition count, for the gate
-window (default) or the whole registry.
+discipline — for every registered plan under a DIFFERENT
+shuffle-partition count.
 
 The integer-moments / FLOOR-quantize idioms exist precisely so this
 sweep is boring; run it after adding plans whose terminal expressions
-involve floats. Round-6 baseline: all 50 window plans bitwise-green at
-both 8 and 32 partitions.
+involve floats.
 
 Usage:
-    python tools/parity_sweep.py [--partitions N] [--all]
+    python tools/parity_sweep.py [--partitions N] [--sf-dir DIR]
 """
 
 from __future__ import annotations
@@ -29,9 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--partitions", type=int, default=32)
-    ap.add_argument(
-        "--all", action="store_true", help="sweep every plan, not just the window"
-    )
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
@@ -43,13 +39,11 @@ def main() -> int:
         f"parity{args.partitions}", shuffle_partitions=args.partitions
     )
     plans = all_plans()
-    names = list(plans) if args.all else list(plans)[:50]
+    names = [n for n, p in plans.items() if p.oracle is not None]
     con = _duck_conn(args.sf_dir)
     failures = []
     for name in names:
         p = plans[name]
-        if p.oracle is None:
-            continue
         try:
             got = _normalize(p.fn(spark, args.sf_dir).toPandas())
             want = _normalize(con.execute(p.oracle).df())
