@@ -163,8 +163,8 @@ def _cand_doc_filter(
     is bounded by banded-LSH construction, but the TOTAL candidate
     volume grows with corpus size, so a forced hint here would risk
     executor memory at 100 TB (r14 verdict #3). The gate is
-    ``tables.maybe_broadcast`` keyed on the documents table's on-disk
-    footprint — conservative by construction: when the whole corpus
+    ``tables.maybe_broadcast`` keyed on the documents table's scan
+    size — conservative by construction: when the whole corpus
     fits the broadcast budget, the distinct doc-id projection (8
     bytes/row vs full text) certainly does. Under the gate (every
     bench SF) the probe is map-side on the parquet scan with zero new
@@ -310,7 +310,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     above {EXACT_SHINGLE_MAX_DOCS} docs raise ExactOracleRegimeError
     in milliseconds instead of running the quadratic (r14).
     """
-    _n_docs = table_num_rows(sf_dir, "documents")
+    _n_docs = table_num_rows(spark, sf_dir, "documents")
     _guard_exact_regime(
         _n_docs
         if _n_docs is not None
@@ -771,26 +771,6 @@ def _dot_unrolled(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
 EMB_SPREAD_BYTES = 256 * 1024
 
 
-def _emb_spread_parts(spark: SparkSession, sf_dir: str) -> int | None:
-    """Spread width for the embeddings scan, derived from INPUT SIZE
-    (r15; guide §2 "make partitioning scale-adaptive — derive from
-    input size — rather than a constant tuned for local mode or the
-    cluster"). None = skip the repartition: the scan's natural splits
-    (on-disk bytes / maxPartitionBytes) already meet the target."""
-    from compendium_spark.tables import _on_disk_bytes  # noqa: PLC0415
-
-    par = spark.sparkContext.defaultParallelism
-    try:
-        b = _on_disk_bytes(f"{sf_dir}/embeddings.parquet")
-    except OSError:
-        return par  # unknown footprint: keep the conservative spread
-    target = max(1, min(par, -(-b // EMB_SPREAD_BYTES)))
-    mpb = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
-    if b // mpb >= target:
-        return None
-    return target
-
-
 def _load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings, spread across cores — width derived from input size.
 
@@ -801,11 +781,12 @@ def _load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny table — 32 kernel tasks of ~60 rows each pay 32 Python
     roundtrips for sub-ms of compute apiece (the r14 profile's
     run≫cpu signature: 133 tasks / 17 s task-wall / 1.2 s CPU in
-    sim_range_search). r15: _emb_spread_parts sizes the width from
-    on-disk bytes (~256 KB/partition, env-overridable), caps it at
-    core count, and skips the repartition once the scan's natural
-    splits cover it — at 100 TB the source has thousands of splits
-    and the exchange vanishes, exactly as before, just mechanically.
+    sim_range_search). So the width comes from the one size gate,
+    ``tables.spread_parts`` with ``EMB_SPREAD_BYTES`` per partition:
+    ceil(table bytes / 256 KB), capped at core count, and no
+    repartition at all once the scan's natural splits cover it — a
+    one-split table that needs one partition (sf0.001/sf0.01), or the
+    thousands of splits at 100 TB.
     Measured at sf0.1 (width 4 vs 32, min-of-3 over the 12 embedding
     plans): 20.6 → 19.1 s, train_ivf_centroids 1.59 → 0.87 s.
     A dim mismatch cannot pass silently: with ANSI mode on,
@@ -813,7 +794,7 @@ def _load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle (which always folds the full list) disagree.
     """
     emb = load(spark, sf_dir, "embeddings")
-    parts = _emb_spread_parts(spark, sf_dir)
+    parts = spread_parts(spark, sf_dir, "embeddings", EMB_SPREAD_BYTES)
     if parts is not None:
         emb = emb.repartition(parts, "vec_id")
     return emb.select("vec_id", _as_double("embedding").alias("e"))
@@ -1077,7 +1058,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark jobs; the guard's documented "metadata read"), falling
     # back to a real count job only when stats are unreadable (r15 —
     # the count job used to re-run the scan+spread per invocation)
-    _meta_n = table_num_rows(sf_dir, "embeddings")
+    _meta_n = table_num_rows(spark, sf_dir, "embeddings")
     n_vec = _meta_n if _meta_n is not None else emb.count()
     _guard_exact_regime(
         n_vec,
@@ -1794,7 +1775,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties (n_a == n_b) resolve identically. Inputs above
     {EXACT_SHINGLE_MAX_DOCS} docs raise ExactOracleRegimeError (r14).
     """
-    _n_docs = table_num_rows(sf_dir, "documents")
+    _n_docs = table_num_rows(spark, sf_dir, "documents")
     _guard_exact_regime(
         _n_docs
         if _n_docs is not None
@@ -2056,6 +2037,10 @@ def _threshold_curve_sql() -> str:
 
     l_case = _sql_adaptive_tables_case("(SELECT c FROM cnt)")
     taus = ", ".join(f"CAST({t} AS DOUBLE)" for t in EMB_TAU_SWEEP)
+    # ent (both self-join legs) and legs (pair_agg and aff) are
+    # MATERIALIZED: DuckDB 1.0 inlines a plain CTE at every reference,
+    # re-running the bucket union per use — same digest, 102.7 s →
+    # 28.6 s at sf0.1 (4 DuckDB threads)
     return f"""
 WITH v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -2067,7 +2052,7 @@ n AS (
          sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
   FROM v
 ),
-ent AS (
+ent AS MATERIALIZED (
   SELECT * FROM ({_sql_tables_union("embedding", N_TABLES_MAX)})
   WHERE tbl < ({l_case})
 ),
@@ -2083,7 +2068,7 @@ scored AS (
            / 1000000.0 AS cosine
   FROM cand JOIN n x ON vec_a = x.vec_id JOIN n y ON vec_b = y.vec_id
 ),
-legs AS (
+legs AS MATERIALIZED (
   SELECT s.vec_a, s.vec_b, t.threshold
   FROM scored s, (SELECT unnest([{taus}]) AS threshold) t
   WHERE s.cosine >= t.threshold
@@ -2139,7 +2124,7 @@ def emb_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load_embeddings(spark, sf_dir)
     # L knob from parquet footer stats (zero Spark jobs; same exact
     # count), falling back to a count job when stats are unreadable
-    _meta_n = table_num_rows(sf_dir, "embeddings")
+    _meta_n = table_num_rows(spark, sf_dir, "embeddings")
     n_vec = _meta_n if _meta_n is not None else emb.count()
     n_tables = adaptive_n_tables(n_vec)
     n = emb.withColumn("nrm", F.sqrt(_dot_unrolled(F.col("e"), F.col("e"))))

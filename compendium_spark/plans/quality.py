@@ -1476,7 +1476,10 @@ def sim_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _split_leakage_sql() -> str:
     # the near-dup cluster CTEs are the SAME text dedup_cluster_labels
     # gates (imported builders), so the leakage audit and the cluster
-    # plan can never drift apart
+    # plan can never drift apart. sh_arr, pairs and edges are each read
+    # more than once (edges once per recursion step): DuckDB 1.0 inlines
+    # a plain CTE at every reference, so they are MATERIALIZED — same
+    # digest, 23.8 s → 2.2 s at sf0.001 (4 DuckDB threads)
     from compendium_spark.plans.extended import (  # noqa: PLC0415
         _MINHASH_CAND_SQL_BODY,
         _SHINGLES_SQL,
@@ -1497,8 +1500,8 @@ def _split_leakage_sql() -> str:
     )
     return f"""
 WITH RECURSIVE {body},
-sh_arr AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM documents),
-pairs AS (
+sh_arr AS MATERIALIZED (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM documents),
+pairs AS MATERIALIZED (
   SELECT doc_a, doc_b
   FROM cand
   JOIN sh_arr a ON doc_a = a.doc_id
@@ -1507,7 +1510,7 @@ pairs AS (
           / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
         >= {JACCARD_THRESHOLD}
 ),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION
   SELECT doc_b AS src, doc_a AS dst FROM pairs

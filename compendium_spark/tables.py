@@ -1,16 +1,25 @@
-"""Test-data table loading.
+"""Test-data table loading and the size gates over those tables.
 
 The driver provides deterministic TPC-H-ish parquet at
 ``/root/testdata/sf{0.001,0.01,0.1}`` (TESTDATA.md). These helpers load
-them with explicit paths — in production these would be catalog tables
-(``spark.table``) partitioned/bucketed per §"scale notes" in each plan
-module.
+them with explicit paths or URIs — in production these would be catalog
+tables (``spark.table``) partitioned/bucketed per §"scale notes" in each
+plan module.
+
+Every scale decision a plan makes reads the table's size from Spark
+itself (:func:`scan_bytes`, the relation's Catalyst statistic) and the
+session's ``maxPartitionBytes``: :func:`spread_parts` for manual
+compute spreads, :func:`maybe_broadcast` for broadcast hints and
+:func:`table_num_rows` for footer row counts. None of them walks the
+local filesystem, so a ``file://`` or ``s3a://`` address gets the same
+decisions as a plain path.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,35 +80,6 @@ def clear_scan_cache() -> None:
     _scan_cache.clear()
 
 
-def table_num_rows(sf_dir: str, name: str) -> int | None:
-    """Exact row count from parquet FOOTER metadata — zero Spark jobs.
-
-    This is the catalog-statistics read the regime guards document
-    ("the count is a parquet metadata read"): a production metastore
-    answers COUNT(*) bounds from table stats without scheduling a
-    scan. Returns None when the footprint cannot be read (caller
-    falls back to a real ``.count()`` job). Handles both a single
-    ``<name>.parquet`` file and a directory of part files."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_rows
-            return total
-        return None
-    except Exception:  # noqa: BLE001 — stats miss → caller runs count()
-        return None
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Parquet → full pushdown/pruning.
 
@@ -129,72 +109,103 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Broadcast only dims whose on-disk parquet stays under this budget.
-# nation/region are constant-size (25/5 rows at every SF) and always
-# qualify; customer/part/supplier grow linearly with SF and fall back
-# to AQE's runtime strategy choice once they outgrow the budget —
-# a forced F.broadcast() on an SF-scaling table is an executor OOM at
-# 100 TB, so the hint must be size-gated, never unconditional.
+# Broadcast only dims whose scan stays under this budget. nation/region
+# are constant-size (25/5 rows at every SF) and always qualify;
+# customer/part/supplier grow linearly with SF and fall back to AQE's
+# runtime strategy choice once they outgrow the budget — a forced
+# F.broadcast() on an SF-scaling table is an executor OOM at 100 TB,
+# so the hint must be size-gated, never unconditional.
 BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
 
 
-def _on_disk_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    if not os.path.isdir(path):
-        # unknown footprint must mean NO hint — os.walk on a missing
-        # path yields nothing, which would read as "0 bytes, broadcast!"
-        raise OSError(f"no such table path: {path}")
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
+def scan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate for ``df``: the optimized plan's
+    ``stats().sizeInBytes``. For a bare file scan that is the sum of
+    the listed file sizes — the catalog statistic a metastore would
+    serve — read from the relation Spark already resolved, on a plain
+    path or a ``file://``/``s3a://`` URI alike. Driver-side only: no
+    Spark job runs, and the optimized plan is cached on ``df``, so a
+    repeat call on a cached ``load()`` frame is a py4j roundtrip."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def spread_parts(spark: SparkSession, sf_dir: str, name: str) -> int | None:
+def table_num_rows(spark: SparkSession, sf_dir: str, name: str) -> int | None:
+    """Exact row count from parquet FOOTER metadata — zero Spark jobs.
+
+    This is the catalog-statistics read the regime guards document
+    ("the count is a parquet metadata read"): a production metastore
+    answers COUNT(*) from table stats without scheduling a scan. The
+    footers are those of the table's own file listing
+    (``load(...).inputFiles()``), opened through pyarrow's filesystem
+    for the URI's scheme. Returns None when they cannot be read (a
+    scheme pyarrow has no filesystem for, such as ``s3a``); the caller
+    then falls back to a real ``.count()`` job."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyarrow import fs  # noqa: PLC0415
+
+    try:
+        total = 0
+        for uri in load(spark, sf_dir, name).inputFiles():
+            filesystem, path = fs.FileSystem.from_uri(uri)
+            with filesystem.open_input_file(path) as f:
+                total += pq.ParquetFile(f).metadata.num_rows
+        return total
+    except (AnalysisException, pa.ArrowException, OSError):
+        return None  # stats miss: the caller runs count()
+
+
+def spread_parts(
+    spark: SparkSession, sf_dir: str, name: str, part_bytes: int | None = None
+) -> int | None:
     """Width for the manual compute-spread repartition over ``name``,
     or None when the repartition should be SKIPPED because the scan's
     natural splits already provide it.
 
-    The testdata tables are one parquet file each, so a heavy
-    per-row stage (tokenize+shingle+md5, Arrow kernels) downstream of
-    a bare scan runs on ONE core; the plan files spread such scans to
-    ``defaultParallelism``. But that constant is a LOCAL-MODE fact: at
-    100 TB the same table scans as thousands of natural splits and the
-    unconditional repartition becomes a full shuffle of the corpus
-    that only REDUCES parallelism. The r14/r15 docstrings said "at
-    scale this is a no-op to remove" — by hand. This derives it
-    mechanically (guide §2: scale-adaptive partitioning, never a
-    constant tuned for local mode or the cluster): splits ≈ on-disk
-    bytes / maxPartitionBytes; once that reaches core count the
-    repartition vanishes. Below the threshold the width is exactly
-    ``defaultParallelism`` — the plan at every bench SF is
-    byte-identical to the constant it replaces (the r15 width-
-    narrowing probe measured 16/8 WORSE for shingle-heavy plans, so
-    the local width is deliberately untouched).
+    The testdata tables are one parquet file each, so a heavy per-row
+    stage (tokenize+shingle+md5, Arrow kernels) downstream of a bare
+    scan runs on ONE core; the plans spread such scans. But that width
+    is a LOCAL-MODE fact: at 100 TB the same table scans as thousands
+    of natural splits and an unconditional repartition becomes a full
+    shuffle of the corpus that only REDUCES parallelism. So the gate
+    derives the width from input size, never from a constant tuned for
+    local mode or for the cluster:
+
+    - the target width is ``defaultParallelism``; with ``part_bytes``
+      it is ``ceil(bytes / part_bytes)``, clamped to [1, par];
+    - the scan's natural splits are ``ceil(bytes / maxPartitionBytes)``,
+      with ``bytes`` from :func:`scan_bytes` and ``maxPartitionBytes``
+      from the session;
+    - once the splits reach the target, the repartition is skipped.
+
+    Spark's ``openCostInBytes``/bytes-per-core term is deliberately
+    left out: it cuts a single-row-group file into several splits of
+    which only one holds rows, so counting them would skip spreads a
+    one-row-group table still needs. At every bench SF the documents
+    and events spreads stay at full core width (narrower widths measured
+    slower for the shingle-heavy plans at sf0.1).
     """
     par = spark.sparkContext.defaultParallelism
-    try:
-        b = _on_disk_bytes(f"{sf_dir}/{name}.parquet")
-    except OSError:
-        return par  # unknown footprint: keep the conservative spread
-    mpb = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
-    if b // mpb >= par:
+    b = scan_bytes(load(spark, sf_dir, name))
+    target = par if part_bytes is None else max(1, min(par, -(-b // part_bytes)))
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if -(-b // mpb) >= target:
         return None
-    return par
+    return target
 
 
 def maybe_broadcast(
     spark: SparkSession, sf_dir: str, name: str, df: DataFrame | None = None
 ) -> DataFrame:
     """Load ``name`` (or take a pre-filtered ``df`` over it) and attach
-    a broadcast hint only if the table's files fit the broadcast
-    budget. In production (catalog tables) the same gate would read the
-    catalog's table statistics instead of the filesystem."""
+    a broadcast hint only if the table fits the broadcast budget. The
+    size is the table's Catalyst statistic (:func:`scan_bytes` of the
+    whole table, not of ``df``, so the decision is one per table); an
+    unresolvable table never gets the hint."""
     out = df if df is not None else load(spark, sf_dir, name)
     try:
-        small = _on_disk_bytes(f"{sf_dir}/{name}.parquet") <= BROADCAST_BUDGET_BYTES
-    except OSError:
+        small = scan_bytes(load(spark, sf_dir, name)) <= BROADCAST_BUDGET_BYTES
+    except AnalysisException:
         small = False
     return F.broadcast(out) if small else out
 

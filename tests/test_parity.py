@@ -9,16 +9,20 @@ rounding), so any diff is a real defect.
 
 The parity matrix at the end adds the checks one sf0.01 pass cannot
 see, one table and one parametrized test per check: oracle parity one
-scale factor up, shuffle-partition invariance, repeat-run stability
-and rerun idempotency.
+scale factor up, shuffle-partition invariance, repeat-run stability,
+rerun idempotency and the size gates' at-scale branches.
 """
 
 from __future__ import annotations
+
+import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 import pytest
 
+from compendium_spark import tables
 from compendium_spark.plans import all_plans
 from compendium_spark.tables import TABLE_NAMES
 
@@ -289,6 +293,103 @@ RERUN_IDEMPOTENT = [
 ]
 
 
+# at-scale branches of the size gates, on the fixtures: every plan that
+# reaches tables.spread_parts, maybe_broadcast or table_num_rows, run
+# at sf0.001 addressed as a file:// URI with maxPartitionBytes=4k (so
+# every spread gate finds its scan's splits at core count and skips),
+# a zero broadcast budget and autoBroadcastJoinThreshold=-1 (no hint,
+# no planner broadcast), and table_num_rows answering None (the
+# count-job fallback a scheme without footer access takes); shuffle
+# partitions rotate through 1/7/64 and AQE alternates, by list index
+SCALE_REGIME = [
+    "curate_contamination_report",
+    "curate_corpus",
+    "curate_decontaminate",
+    "curate_dsir_resample",
+    "curate_dsir_weights",
+    "curate_quality_dedup",
+    "curate_split_leakage",
+    "dedup_cluster_labels",
+    "dedup_cluster_stats",
+    "dedup_containment",
+    "dedup_containment_pipeline",
+    "dedup_cross_source_rate",
+    "dedup_embedding_cosine",
+    "dedup_impact_report",
+    "dedup_incremental_lsh",
+    "dedup_lsh_tuning_curve",
+    "dedup_minhash_lsh",
+    "dedup_neardup_pipeline",
+    "dedup_ngram_jaccard",
+    "dedup_semdedup",
+    "dedup_signature_jaccard",
+    "dedup_simhash",
+    "dq_schema_profile",
+    "emb_dedup_threshold_curve",
+    "emb_kcenter_init",
+    "emb_kcenter_scalable",
+    "emb_lang_centroids",
+    "emb_matryoshka_recall",
+    "graph_2hop_features",
+    "graph_common_neighbors",
+    "graph_kcore",
+    "graph_pagerank",
+    "graph_triangle_count",
+    "j3_key_remap_join",
+    "j5_membership_anti",
+    "j6_partial_update_merge",
+    "mm_audio_vad",
+    "mm_feature_pipeline",
+    "mm_frame_sample",
+    "mm_scene_cuts",
+    "q11_important_stock",
+    "q14_promo_effect",
+    "q15_top_supplier",
+    "q16_supplier_count",
+    "q17_small_quantity_revenue",
+    "q19_discounted_revenue",
+    "q20_potential_promotion",
+    "q21_waiting_orders",
+    "q2_min_cost_supplier",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "q9_product_type_profit",
+    "sim_cosine_topk",
+    "sim_filtered_topk",
+    "sim_frontier_report",
+    "sim_hybrid_topk",
+    "sim_ivf_cells",
+    "sim_ivf_topk",
+    "sim_ivf_tuning_curve",
+    "sim_ivfpq_topk",
+    "sim_knn_graph",
+    "sim_knn_graph_multiprobe",
+    "sim_lsh_buckets",
+    "sim_lsh_topk",
+    "sim_mips_topk",
+    "sim_mmr_topk",
+    "sim_multiprobe_topk",
+    "sim_pq_adc_topk",
+    "sim_pq_codes",
+    "sim_range_search",
+    "sim_recall_report",
+    "sim_rrf_fusion",
+    "text_bm25_topk",
+    "text_boilerplate_shingles",
+    "text_heaps_curve",
+    "text_ngram_novelty",
+    "text_shingle_containment",
+    "text_source_overlap_matrix",
+    "text_tfidf_log",
+    "text_tfidf_topk",
+    "train_ivf_centroids",
+    "train_pq_codebooks",
+    "train_quality_logreg",
+]
+
+
 @pytest.mark.parametrize("name", SF_FULL_PARITY)
 def test_sf01_parity(spark, name):
     _assert_oracle_parity(spark, name, SF_FULL)
@@ -329,3 +430,76 @@ def test_repeat_run_stable_sf01(spark, name):
 def test_rerun_idempotent(spark, name):
     a = _run(spark, name, SF_ORACLE)
     _assert_same_run(a, _run(spark, name, SF_ORACLE), f"{name}@rerun")
+
+
+SCALE_SHUFFLE_PARTITIONS = (1, 7, 64)
+
+
+def _record_gates(mp: pytest.MonkeyPatch) -> list[tuple[str, str, bool]]:
+    """Wrap the size gates wherever a module holds them; returns the
+    log of (gate, table, took the large branch) appended per call.
+    table_num_rows is forced to its count-job fallback."""
+    log: list[tuple[str, str, bool]] = []
+    spread, bcast = tables.spread_parts, tables.maybe_broadcast
+
+    def spread_parts(spark, sf_dir, name, part_bytes=None):
+        parts = spread(spark, sf_dir, name, part_bytes)
+        log.append(("spread_parts", name, parts is None))
+        return parts
+
+    def maybe_broadcast(spark, sf_dir, name, df=None):
+        out = bcast(spark, sf_dir, name, df)
+        base = df if df is not None else tables.load(spark, sf_dir, name)
+        log.append(("maybe_broadcast", name, out is base))
+        return out
+
+    def table_num_rows(spark, sf_dir, name):
+        log.append(("table_num_rows", name, True))
+        return None
+
+    wrappers = {
+        "spread_parts": (spread, spread_parts),
+        "maybe_broadcast": (bcast, maybe_broadcast),
+        "table_num_rows": (tables.table_num_rows, table_num_rows),
+    }
+    for mod_name, mod in list(sys.modules.items()):
+        if not mod_name.startswith("compendium_spark"):
+            continue
+        for attr, (orig, wrapper) in wrappers.items():
+            if getattr(mod, attr, None) is orig:
+                mp.setattr(mod, attr, wrapper)
+    mp.setattr(tables, "BROADCAST_BUDGET_BYTES", 0)
+    return log
+
+
+@pytest.mark.parametrize("name", SCALE_REGIME)
+def test_scale_regime(spark, name):
+    """Every gate must take its large branch (a regime that fails to
+    flip one is not a pass), and the result must still be hash-equal
+    to the oracle on the plain path, or bitwise-equal to the plan's
+    own default-regime run when it has no oracle."""
+    i = SCALE_REGIME.index(name)
+    confs = {
+        "spark.sql.files.maxPartitionBytes": "4k",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.shuffle.partitions": str(SCALE_SHUFFLE_PARTITIONS[i % 3]),
+        "spark.sql.adaptive.enabled": "true" if i % 2 else "false",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    with pytest.MonkeyPatch.context() as mp:
+        log = _record_gates(mp)
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            got = _run(spark, name, Path(SF_SMOKE).as_uri())
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+    assert log, f"{name}: reached no size gate"
+    small = [call for call in log if not call[2]]
+    assert not small, f"{name}: gates took the small branch: {small}"
+    if PLANS[name].oracle is None:
+        _assert_same_run(got, _run(spark, name, SF_SMOKE), f"{name}@scale")
+    else:
+        want = _normalize(_duck_conn(SF_SMOKE).execute(PLANS[name].oracle).df())
+        _assert_hash_equal(got, want, f"{name}@scale")

@@ -16,11 +16,11 @@ from .conftest import SF_SMOKE
 
 @pytest.mark.parametrize("name", list(tables.TABLE_NAMES))
 def test_footer_count_matches_spark_count(spark, name):
-    assert table_num_rows(SF_SMOKE, name) == load(spark, SF_SMOKE, name).count()
+    assert table_num_rows(spark, SF_SMOKE, name) == load(spark, SF_SMOKE, name).count()
 
 
-def test_missing_table_returns_none():
-    assert table_num_rows("/nonexistent", "documents") is None
+def test_missing_table_returns_none(spark):
+    assert table_num_rows(spark, "/nonexistent", "documents") is None
 
 
 def test_clear_scan_cache(spark):

@@ -19,6 +19,8 @@ from compendium_spark import tables
 from compendium_spark.session import get_session
 from compendium_spark.tables import spread_parts
 
+from .conftest import SF_FULL
+
 
 @pytest.fixture(scope="module")
 def spark():
@@ -32,20 +34,19 @@ def test_full_width_at_every_bench_sf(spark):
             assert spread_parts(spark, f"/root/testdata/{sf}", table) == par
 
 
-def test_skipped_above_natural_split_threshold(spark, monkeypatch):
+def test_skipped_above_natural_split_threshold(spark):
     par = spark.sparkContext.defaultParallelism
-    mpb = 128 * 1024 * 1024
-    # exactly at the threshold: par natural splits -> skip
-    monkeypatch.setattr(tables, "_on_disk_bytes", lambda p: par * mpb)
-    assert spread_parts(spark, "/root/testdata/sf0.1", "documents") is None
-    # one byte under: still spread
-    monkeypatch.setattr(tables, "_on_disk_bytes", lambda p: par * mpb - 1)
-    assert spread_parts(spark, "/root/testdata/sf0.1", "documents") == par
-
-
-def test_unknown_footprint_keeps_conservative_spread(spark):
-    par = spark.sparkContext.defaultParallelism
-    assert spread_parts(spark, "/tmp/no_such_sf_dir", "documents") == par
+    b = tables.scan_bytes(tables.load(spark, SF_FULL, "documents"))
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        # exactly at the threshold: par natural splits -> skip
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(-(-b // par)))
+        assert spread_parts(spark, SF_FULL, "documents") is None
+        # one split short: still spread
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(-(-b // (par - 1))))
+        assert spread_parts(spark, SF_FULL, "documents") == par
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
 def test_gated_plan_is_byte_identical_at_bench_sf(spark):
